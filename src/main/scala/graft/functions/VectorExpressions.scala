@@ -324,7 +324,7 @@ case class DotProductF(left: Expression, right: Expression)
   * EmbDim can never null-poison centroids (the r15 ADVICE hazard); a
   * length mismatch WITHIN a group throws instead of silently truncating.
   * NULL inputs are skipped (SQL sum semantics); an all-NULL group yields
-  * NULL.
+  * NULL. A NULL element inside a vector throws rather than counting as 0.
   */
 case class VecSumLong(child: Expression,
                       mutableAggBufferOffset: Int = 0,
@@ -354,7 +354,12 @@ case class VecSumLong(child: Expression,
       throw new IllegalArgumentException(
         s"$prettyName: vector width mismatch in group (${b.length} vs $n)")
     var i = 0
-    while (i < n) { b(i) += arr.getLong(i); i += 1 }
+    while (i < n) {
+      if (arr.isNullAt(i))
+        throw new IllegalArgumentException(
+          s"$prettyName: NULL vector element at position $i")
+      b(i) += arr.getLong(i); i += 1
+    }
     b
   }
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Iterate
 import graft.util.Tables._
 
 /** Near-duplicate detection for LLM-data pipelines: MinHash+LSH and SimHash.
@@ -183,13 +184,9 @@ object Dedup {
     * pairs — never payloads — and the node set is only the docs that appear
     * in a candidate pair, a tiny fraction of the corpus.
     *
-    * Labels are EAGERLY lineage-truncated per round (localCheckpoint):
-    * the pointer-jump self-join references the round's frame twice, so an
-    * un-truncated logical plan would DOUBLE every iteration — measured 30 s
-    * of pure plan analysis to cluster 255 pairs. Caching alone doesn't help
-    * (persist keeps data, not plan size). On a multi-node cluster swap
-    * localCheckpoint for reliable checkpoint(dir) if executor loss during
-    * the loop must be survivable.
+    * Labels are EAGERLY lineage-truncated per round through
+    * [[graft.util.Iterate]] (the pointer-jump self-join references the
+    * round's frame twice; its scaladoc has the plan-doubling rationale).
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
                           maxIter: Int = 15): DataFrame = {
@@ -204,15 +201,18 @@ object Dedup {
       .persist(StorageLevel.MEMORY_AND_DISK)
     // seed with round 0's neighbor-min directly: one aggregate replaces the
     // old identity-label init (distinct) + first propagate round (2 joins)
-    var labels = edges.groupBy(col("src").as("node"))
+    val labels0 = edges.groupBy(col("src").as("node"))
       .agg(min(col("dst")).as("m"))
       .select(col("node"), least(col("node"), col("m")).as("label"))
       .localCheckpoint(true)
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
+    // labels only decrease, so changed ⇔ any label < its round-start value;
+    // the probe is a filter over the already-checkpointed frame, no join
+    def unchanged(jumped: DataFrame): Boolean =
+      jumped.filter(col("label") =!= col("old")).limit(1).count() == 0
+    val jumped = Iterate(labels0, maxIter)(Seq(_), (_, j) => unchanged(j)) { (r, _) =>
+      val labels = r.select(col("node"), col("label"))
       // (1) neighbor-min propagation, carrying the round-start label as
-      // `old` so change detection below needs no extra join
+      // `old` so change detection needs no extra join
       val nbrMin = edges
         .join(labels.select(col("node").as("dst"), col("label").as("nbr_label")), "dst")
         .groupBy(col("src").as("node")).agg(min(col("nbr_label")).as("nbr_label"))
@@ -220,20 +220,14 @@ object Dedup {
         .select(col("node"), col("label").as("old"),
                 least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"))
       // (2) pointer jump: label := label(label)
-      val jumped = propagated
+      propagated
         .join(propagated.select(col("node").as("label"), col("label").as("label2")),
               Seq("label"), "left")
         .select(col("node"), col("old"), coalesce(col("label2"), col("label")).as("label"))
         .localCheckpoint(true)
-      // labels only decrease, so changed ⇔ any label < its round-start value;
-      // the probe is a filter over the already-checkpointed frame, no join
-      val changed = jumped.filter(col("label") =!= col("old")).limit(1).count()
-      labels = jumped.select(col("node"), col("label"))
-      converged = changed == 0
-      iter += 1
     }
     edges.unpersist()
-    labels
+    jumped.select(col("node"), col("label"))
   }
 
   /** Full-corpus canonical assignment from a components labeling: every id

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.util.Tables._
-import graft.util.{PrefixSum, TopK}
+import graft.util.{Iterate, PrefixSum, TopK}
 
 /** Analytics-insight tier: the BI/statistics operators a warehouse's
   * consumers run on top of the star schema the reference builds
@@ -1274,16 +1274,15 @@ object Insights {
     // normalized — the normalizer is ONE Long, so each round COLLECTS it
     // (GraphX's job-per-superstep shape, the ScaleInfraSpec iterative
     // exemption's rationale) and folds it back as a literal. Round frames
-    // are EAGER localCheckpoints, not lazy persist marks: both lazy
-    // variants were measured and rejected — broadcast-agg normalizers
-    // double the raw-score reference (plan grows 4^rounds; 54 s at
-    // sf0.1), and even with collected normalizers + persisted+counted
-    // predecessors, round walls GREW geometrically (round 3: 4.3/8.1/
-    // 16.5/30.7 s per stage — cache-state/canonicalization drag over the
-    // ever-deeper logical plans). Checkpoint truncation makes every
+    // are EAGER localCheckpoints through Iterate, not lazy persist marks:
+    // both lazy variants were measured and rejected — broadcast-agg
+    // normalizers double the raw-score reference (plan grows 4^rounds;
+    // 54 s at sf0.1), and even with collected normalizers + persisted+
+    // counted predecessors, round walls GREW geometrically (round 3: 4.3/
+    // 8.1/16.5/30.7 s per stage — cache-state/canonicalization drag over
+    // the ever-deeper logical plans). Checkpoint truncation makes every
     // round O(1): same stages measured 0.1–0.2 s in round 3, 67 s → ~2 s
-    // total. Superseded rounds unpersist as they go (spFixpoint
-    // discipline); frames are (node, score) pairs, ≤16 B·|nodes| each.
+    // total. Frames are (node, score) pairs, ≤16 B·|nodes| each.
     // SPARSE round frames (r15 optimization, guide §2.4): rounds carry only
     // nodes with a NON-ZERO score. The old shape densified every half-round
     // (nodes ⋈ raw, coalesce 0, checkpoint — 2 extra eager jobs + 2 joins
@@ -1296,30 +1295,24 @@ object Insights {
     // depth-1 projection over that checkpoint — 6 eager jobs + 6 node joins
     // per full loop → 2 checkpoints + 2 collects (measured: 63 → 46 jobs,
     // 973 → 557 tasks, 39 → 23 MB shuffled at sf0.1).
-    var h = nodes.crossJoin(broadcast(nN))
+    val h0 = nodes.crossJoin(broadcast(nN))
       .select(col("node"), expr("1000000000000 div n_nodes").as("h"))
       .localCheckpoint(true)
-    var a: DataFrame = null
-    var aChk: DataFrame = null
-    var hChk: DataFrame = h
-    for (_ <- 1 to HitsRounds) {
-      val araw = e.join(h, col("src") === col("node"))
+    def divisor(raw: DataFrame, c: String): Long = // non-negative: floor div
+      math.max(1L, raw.agg(sum(col(c))).head().getLong(0) / 1000000000000L)
+    // state: Seq(h0), then Seq(a, h) after every round
+    val Seq(a, h) = Iterate(Seq(h0), HitsRounds)(identity) { (s, _) =>
+      val araw = e.join(s.last, col("src") === col("node"))
         .groupBy(col("dst")).agg(sum(col("h") * col("w")).as("ar"))
         .localCheckpoint(true)
-      val sa = araw.agg(sum(col("ar"))).head().getLong(0)
-      val da = math.max(1L, sa / 1000000000000L) // non-negative: floor div
-      if (aChk != null) aChk.unpersist()
-      aChk = araw
-      a = araw.select(col("dst").as("node"), expr(s"ar div ${da}L").as("a"))
+      val a = araw.select(col("dst").as("node"),
+                          expr(s"ar div ${divisor(araw, "ar")}L").as("a"))
       val hraw = e.join(a.select(col("node").as("an"), col("a")),
                         col("dst") === col("an"))
         .groupBy(col("src")).agg(sum(col("a") * col("w")).as("hr"))
         .localCheckpoint(true)
-      val sh = hraw.agg(sum(col("hr"))).head().getLong(0)
-      val dh = math.max(1L, sh / 1000000000000L)
-      hChk.unpersist()
-      hChk = hraw
-      h = hraw.select(col("src").as("node"), expr(s"hr div ${dh}L").as("h"))
+      Seq(a, hraw.select(col("src").as("node"),
+                         expr(s"hr div ${divisor(hraw, "hr")}L").as("h")))
     }
     // the returned plan reads only the final checkpointed frames; densify
     // the sparse score frames ONCE (zero-score nodes surface as 0, exactly
@@ -1373,13 +1366,7 @@ object Insights {
       .select(col("src").as("node"), lit(0L).as("dist"))
       .distinct()
 
-    def expand(f: DataFrame): DataFrame =
-      e.join(f, col("src") === col("node"))
-        .groupBy(col("dst").as("n"))
-        .agg(min(col("dist") + col("cost")).as("d"))
-        .select(col("n").as("node"), col("d").as("dist"))
-
-    // Each frontier is referenced TWICE — once by the next round's expand
+    // Each frontier is referenced TWICE — once by the next round's relax
     // and once by the final union — so without a cache boundary frontier k
     // is recomputed (R−k) times and the physical plan carries O(R²)
     // expansion joins (measured: 90 exchanges, ~12 s at sf0.1). Persisting
@@ -1403,19 +1390,46 @@ object Insights {
     // ceiling across r5–r8: 4.04 s) rather than "fixed" by a 4–8×
     // slowdown that would make every reading deterministic-but-worse.
     val inner = Iterator.iterate(f0)(f =>
-        expand(f).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        relax(e, f).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       .take(SpRounds).toSeq
-    val frontiers = inner :+ expand(inner.last)
+    val frontiers = inner :+ relax(e, inner.last)
     val best = frontiers.reduce(_ union _)
       .groupBy(col("node")).agg(min(col("dist")).as("dist"))
     ordered(best.select(col("node").as("part_id"), col("dist").as("dist_fp")),
             "part_id")
   }
 
+  /** One min-plus frontier expansion — the shared round of [[shortestPath]]
+    * and [[spFixpoint]]: the cheapest one-edge extension of a (node, dist)
+    * frontier over (src, dst, cost) edges, per reached node.
+    */
+  private def relax(e: DataFrame, frontier: DataFrame): DataFrame =
+    e.join(frontier, col("src") === col("node"))
+      .groupBy(col("dst").as("n"))
+      .agg(min(col("dist") + col("cost")).as("d"))
+      .select(col("n").as("node"), col("d").as("dist"))
+
   /** Rounds of peeling in [[kcore]]; fixed so the plan is static and the
     * oracle can unroll the same fold (the q_shortest_path discipline).
     */
   val KcoreRounds = 3
+
+  /** One k-core peel round — the shared round of [[kcore]] and
+    * [[kcoreFixpoint]], which differ only in how k arrives (`atLeastK`
+    * filters the (src, dg) degree frame): the kept node list, persisted
+    * because BOTH semi-joins read it (≤|nodes| rows, so the degree
+    * aggregate runs once per round, not twice), and the lazy (src, dst)
+    * edges between kept nodes.
+    */
+  private def peel(e: DataFrame)(
+      atLeastK: DataFrame => DataFrame): (DataFrame, DataFrame) = {
+    val keep = atLeastK(e.groupBy(col("src")).agg(count(lit(1)).as("dg")))
+      .select(col("src").as("n"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    (keep, e.join(keep.select(col("n").as("src")), Seq("src"), "left_semi")
+      .join(keep.select(col("n").as("dst")), Seq("dst"), "left_semi")
+      .select(col("src"), col("dst")))
+  }
 
   /** k-core peeling over the co-purchase graph — the graph-density filter
     * every recommendation/graph-feature pipeline runs to separate the
@@ -1465,23 +1479,12 @@ object Insights {
     // drops them: bounded-round callers (the bench/Verify harnesses)
     // clearCache() per query; LONG-LIVED sessions should call
     // [[kcoreFixpoint]] instead, which materializes per round exactly so
-    // it can unpersist superseded frames as it goes (the ADVICE r7
-    // leak-free contract lives there).
-    def peel(e: DataFrame): DataFrame = {
-      // keep is referenced by BOTH semi-joins — persist it (≤|nodes| rows)
-      // so the degree aggregate runs once per round, not twice
-      val keep = e.groupBy(col("src")).agg(count(lit(1)).as("dg"))
-        .crossJoin(broadcast(kv))
-        .filter(col("dg") >= col("k"))
-        .select(col("src").as("n"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      e.join(keep.select(col("n").as("src")), Seq("src"), "left_semi")
-        .join(keep.select(col("n").as("dst")), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst"))
+    // it can free superseded frames as it goes (the ADVICE r7 leak-free
+    // contract lives there).
+    val eFinal = (1 to KcoreRounds).foldLeft(e0) { (e, _) =>
+      peel(e)(_.crossJoin(broadcast(kv)).filter(col("dg") >= col("k")))._2
         .persist(StorageLevel.MEMORY_AND_DISK)
     }
-
-    val eFinal = (1 to KcoreRounds).foldLeft(e0)((e, _) => peel(e))
     ordered(
       eFinal.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .select(col("src").as("part_id"), col("deg")),
@@ -1491,45 +1494,34 @@ object Insights {
   /** Convergence-detected k-core — the exact fixpoint the bounded
     * [[kcore]] query approximates with [[KcoreRounds]] rounds: peel nodes
     * of degree < k repeatedly until a round removes NOTHING (delta-count
-    * termination), the [[graft.operators.Dedup.connectedComponents]]
-    * localCheckpoint pattern. The bounded registry query stays the
-    * oracle-gated surface (a static plan the DuckDB fold can unroll); this
-    * is the lib entry point a real "give me THE k-core" caller wants.
+    * termination), rounds run through [[graft.util.Iterate]]. The bounded
+    * registry query stays the oracle-gated surface (a static plan the
+    * DuckDB fold can unroll); this is the lib entry point a real "give me
+    * THE k-core" caller wants.
     *
-    * Per-round shape is identical to [[kcore]]'s peel — one degree
-    * hash-aggregate plus two semi-joins, shuffling only (node, degree)
-    * pairs and edge endpoints — so the 100 TB story is unchanged; the only
-    * addition is one count() per round over the already-checkpointed edge
-    * frame (cached partitions, no recomputation). Termination needs no
-    * extra pass: edges only shrink, so the round-over-round edge count is
-    * the complete convergence signal. Superseded round frames are
-    * unpersisted as soon as their successor is materialized (the leak-free
-    * long-session discipline ADVICE r7 asked for).
+    * Per-round shape is [[kcore]]'s [[peel]] — one degree hash-aggregate
+    * plus two semi-joins, shuffling only (node, degree) pairs and edge
+    * endpoints — so the 100 TB story is unchanged; the only addition is
+    * one count() per round over the already-checkpointed edge frame
+    * (cached partitions, no recomputation). Termination needs no extra
+    * pass: edges only shrink, so the round-over-round edge count is the
+    * complete convergence signal. Superseded round frames are freed as
+    * soon as their successor is materialized (the leak-free long-session
+    * discipline ADVICE r7 asked for).
     *
     * `edges0` must be a symmetric (src, dst) edge list (both directions
     * present, no self-loops), e.g. the co-purchase graph.
     */
   def kcoreFixpoint(edges0: DataFrame, k: Long, maxIter: Int = 50): DataFrame = {
-    var e = edges0.select(col("src"), col("dst")).localCheckpoint(true)
-    var nEdges = e.count()
-    var converged = nEdges == 0
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val keep = e.groupBy(col("src")).agg(count(lit(1)).as("dg"))
-        .filter(col("dg") >= k)
-        .select(col("src").as("n"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val next = e.join(keep.select(col("n").as("src")), Seq("src"), "left_semi")
-        .join(keep.select(col("n").as("dst")), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst"))
-        .localCheckpoint(true)
+    val e0 = edges0.select(col("src"), col("dst")).localCheckpoint(true)
+    val n0 = e0.count()
+    // state: (edges, edge count)
+    val (e, _) = Iterate((e0, n0), if (n0 == 0) 0 else maxIter)(
+        s => Seq(s._1), (prev, next) => prev._2 == next._2) { case ((e, _), _) =>
+      val (keep, kept) = peel(e)(_.filter(col("dg") >= k))
+      val next = kept.localCheckpoint(true)
       keep.unpersist()
-      val nNext = next.count()
-      e.unpersist()
-      converged = nNext == nEdges
-      e = next
-      nEdges = nNext
-      iter += 1
+      (next, next.count())
     }
     e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .select(col("src").as("node"), col("deg"))
@@ -1543,50 +1535,36 @@ object Insights {
     * only GROWS, so that one 2-value aggregate per round is a complete
     * convergence signal — no self-join against the previous round needed.
     *
-    * Per-round shape matches the bounded query: the frontier (nodes whose
-    * dist improved last round — Δ-stepping's "only relax what changed")
-    * joins the persisted edge list, a group-min merges candidates into the
-    * running best, both frames localCheckpoint eagerly and superseded
-    * rounds unpersist — the lineage-truncation that keeps round r's plan
-    * O(1) instead of O(r), plus the leak-free session discipline. All
-    * arithmetic BIGINT, so results hash-match the sequential fold at any
-    * partitioning.
+    * Per-round shape matches the bounded query ([[relax]]): the frontier
+    * (nodes whose dist improved last round — Δ-stepping's "only relax what
+    * changed") joins the persisted edge list, a group-min merges
+    * candidates into the running best, and both frames localCheckpoint
+    * eagerly through [[graft.util.Iterate]], which keeps round r's plan
+    * O(1) instead of O(r) and frees superseded rounds. All arithmetic
+    * BIGINT, so results hash-match the sequential fold at any partitioning.
     *
     * `edges0` must carry (src, dst, cost ≥ 0); unreachable nodes are
     * absent from the output (the honest miss).
     */
   def spFixpoint(edges0: DataFrame, srcNode: Long, maxIter: Int = 50): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     val e = edges0.select(col("src"), col("dst"), col("cost"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var best = e.sparkSession.range(1)
+    val best0 = e.sparkSession.range(1)
       .select(lit(srcNode).as("node"), lit(0L).as("dist"))
       .localCheckpoint(true)
-    var frontier = best
-    var state = (1L, 0L) // (reached count, dist sum) — monotone signal
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val relaxed = e.join(frontier, col("src") === col("node"))
-        .groupBy(col("dst").as("n"))
-        .agg(min(col("dist") + col("cost")).as("d"))
-        .select(col("n").as("node"), col("d").as("dist"))
-      val merged = best.union(relaxed)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint(true)
-      // next frontier = nodes whose best improved this round; anti-joining
-      // the (node, dist) PAIRS finds exactly those (dists only decrease)
-      val nextFrontier = merged.join(best, Seq("node", "dist"), "left_anti")
-        .localCheckpoint(true)
-      val agg = merged.agg(count(lit(1)), sum(col("dist"))).head()
-      val nextState = (agg.getLong(0), agg.getLong(1))
-      if (frontier ne best) frontier.unpersist()
-      best.unpersist()
-      converged = nextState == state
-      best = merged
-      frontier = nextFrontier
-      state = nextState
-      iter += 1
+    // state: (best, frontier, (reached count, dist sum) — monotone signal)
+    val (best, _, _) = Iterate((best0, best0, (1L, 0L)), maxIter)(
+        s => Seq(s._1, s._2), (prev, next) => prev._3 == next._3) {
+      case ((best, frontier, _), _) =>
+        val merged = best.union(relax(e, frontier))
+          .groupBy(col("node")).agg(min(col("dist")).as("dist"))
+          .localCheckpoint(true)
+        // next frontier = nodes whose best improved this round; anti-joining
+        // the (node, dist) PAIRS finds exactly those (dists only decrease)
+        val nextFrontier = merged.join(best, Seq("node", "dist"), "left_anti")
+          .localCheckpoint(true)
+        val agg = merged.agg(count(lit(1)), sum(col("dist"))).head()
+        (merged, nextFrontier, (agg.getLong(0), agg.getLong(1)))
     }
     e.unpersist()
     best

@@ -327,28 +327,6 @@ object Ivf {
     * the group counts coincide, and the floor division is positive-domain
     * `div` in all three.
     */
-  /** Materialize independent frames' eager localCheckpoints CONCURRENTLY
-    * (guide §2.6 — Spark happily runs several jobs at once; they were
-    * sequential only because the builder awaited each one). Used for the
-    * per-subspace PQ fits, which share no dependency. Results identical
-    * by determinism of each fit; a thread pool the size of the batch.
-    */
-  private def parCheckpoint(frames: Seq[(Int, DataFrame)]): Seq[(Int, DataFrame)] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration._
-    // dedicated pool sized to the batch + finite timeout (ADVICE r15): the
-    // shared fork-join pool can starve under nested futures, and an
-    // infinite await would hide a hung Spark job forever
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(frames.size)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try {
-      val futs = frames.map { case (s, df) =>
-        s -> Future(df.localCheckpoint(true))
-      }
-      futs.map { case (s, f) => s -> Await.result(f, 30.minutes) }
-    } finally pool.shutdown()
-  }
-
   private def gatedMeansOneAgg(assigned: DataFrame,
                                outCol: String): DataFrame = {
     // r16: ONE vec_sum_q aggregate (elementwise long-array sum kernel)
@@ -773,20 +751,8 @@ object Ivf {
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
       .limit(TrainCap)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    def slicedR(df: DataFrame, s: Int): DataFrame =
-      df.select(col("vec_id"), col("cell"),
-                slice(col("rv"), s * PqSubDim + 1, PqSubDim).as("qv"))
-    // the 4 per-subspace fits are INDEPENDENT and tiny — submit their
-    // eager checkpoints from a thread pool so their stages overlap (guide
-    // §2.6, r15: actions were sequential only because the driver called
-    // them sequentially; results are deterministic integer fits, so
-    // ordering cannot matter; worst-case concurrent first-touch of the
-    // shared persisted sample computes a partition twice)
-    val cbs = parCheckpoint((0 until PqSubs).map { s =>
-      s -> gatedKmeansFitLinear(
-             slicedR(sample, s).select(col("vec_id"), col("qv")),
-             codes, Iters)
-    })
+    val cbUnion = fitCodebooks(sample, codes)
+    val cbs = (0 until PqSubs).map(s => s -> codebook(cbUnion, s))
     // probe machinery: nprobe nearest cells, then a residual PER CELL
     val probe = qemb.filter(col("vec_id") === 0)
       .select(col("qv").as("pq")).limit(1)
@@ -808,7 +774,7 @@ object Ivf {
     }
     // candidate vectors = members of probed cells; ADC = Σ_s dtable lookups
     val perSub = cbs.zip(dtables).map { case ((s, cb), dt) =>
-      gatedWithBest(slicedR(resid, s), cb)
+      gatedWithBest(rvSlice(resid, s), cb)
         .join(dt, Seq("cell", "centroid_id")) // broadcast: prunes + looks up
         .select(col("vec_id"), col("d"))
     }
@@ -914,6 +880,30 @@ object Ivf {
     df.select(col("vec_id"), col("cell"),
               slice(col("rv"), s * PqSubDim + 1, PqSubDim).as("qv"))
 
+  /** The [[PqSubs]] independent drop-empty PQ codebook fits over a
+    * residual sample, as ONE subspace-tagged (subspace, code, centroid)
+    * union checkpointed eagerly to a leaf: the fits are <=codes rows each
+    * but their chains are deep, and their readers (ADC tables, code
+    * assignments) would otherwise re-analyze every fit subtree (the
+    * [[annIvfPq]] exemption class). One action over the union lets AQE
+    * submit the four chains' stages side by side, so the fits overlap
+    * without a driver thread per fit.
+    */
+  private def fitCodebooks(sample: DataFrame, codes: Int): DataFrame =
+    (0 until PqSubs).map { s =>
+      gatedKmeansFitLinear(rvSlice(sample, s).select(col("vec_id"), col("qv")),
+                           codes, Iters)
+        .select(lit(s.toLong).as("subspace"),
+                col("centroid_id").as("code"), col("centroid"))
+    }.reduce(_ unionByName _).localCheckpoint(true)
+
+  /** Subspace `s`'s (centroid_id, centroid) codebook out of a
+    * [[fitCodebooks]] union.
+    */
+  private def codebook(cbUnion: DataFrame, s: Int): DataFrame =
+    cbUnion.filter(col("subspace") === s)
+      .select(col("code").as("centroid_id"), col("centroid"))
+
   /** Build and PERSIST the IVFPQ index (idempotent — returns immediately
     * when a committed index already exists): exactly [[annIvfPq]]'s fit
     * (linear drop-empty coarse k-means over the md5 sample, residual
@@ -954,16 +944,7 @@ object Ivf {
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
       .limit(TrainCap)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // overlapped independent fits — the annIvfPqParts rationale (guide §2.6)
-    val cbs = parCheckpoint((0 until PqSubs).map { s =>
-      s -> gatedKmeansFitLinear(
-             rvSlice(sample, s).select(col("vec_id"), col("qv")),
-             codes, Iters)
-    })
-    val cbUnion = cbs.map { case (s, cb) =>
-      cb.select(lit(s.toLong).as("subspace"),
-                col("centroid_id").as("code"), col("centroid"))
-    }.reduce(_ unionByName _)
+    val cbUnion = fitCodebooks(sample, codes)
     val codesDf = encodeAgainst(resid, cbUnion)
     SnapshotStore.commitSnapshot(cents, s"$root/centroids")
     SnapshotStore.commitSnapshot(cbUnion, s"$root/codebooks")

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Iterate
 import graft.util.Tables._
 
 /** Similarity search over the `embeddings` table (64-dim float vectors).
@@ -417,7 +418,7 @@ object Similarity {
     * normalizers double the lineage per round — the q_hits lesson — and
     * the divisor exceeds Long range at the 100× decade, so it splices
     * back as a DECIMAL literal). ScaleInfraSpec's iterative exemption
-    * names this entry; rounds localCheckpoint and unpersist as they go.
+    * names this entry; rounds run through [[graft.util.Iterate]].
     */
   def embedPcaPower(spark: SparkSession, sfDir: String): DataFrame = {
     // Covariance via a MAP-ONLY per-vector outer product (r15, guide §2.4):
@@ -456,23 +457,19 @@ object Similarity {
     // L1 collect needs it materialized anyway); the normalized vector is a
     // lazy depth-1 projection over that checkpoint — the q_hits sparse-
     // round discipline, one eager job per round instead of two.
-    var v = dims.select(col("j"), lit(1000000L / d0).as("v"))
-    var prevMv: DataFrame = null
-    for (_ <- 1 to PcaRounds) {
+    val v0 = dims.select(col("j"), lit(1000000L / d0).as("v"))
+    val v = Iterate(v0, PcaRounds)(Seq(_)) { (v, _) =>
       val mv = cov.join(v, "j")
         .groupBy(col("i"))
         .agg(sum((col("m") * col("v")).cast("decimal(38,0)")).as("mv"))
         .localCheckpoint(true)
-      if (prevMv != null) prevMv.unpersist()
-      prevMv = mv
       val l1 = mv.agg(sum(abs(col("mv")))).head().getDecimal(0)
       val divisor = BigInt(l1.toBigInteger) / BigInt(1000000) max BigInt(1)
-      v = mv.select(col("i").as("j"),
+      mv.select(col("i").as("j"),
           expr(s"cast(sign(mv) as bigint) * " +
                s"(abs(mv) div cast('$divisor' as decimal(38,0)))").as("v"))
     }
-    cov.unpersist()
-    dims.unpersist()
+    Iterate.release(cov)
     ordered(v.select(col("j").as("dim_idx"), col("v").as("loading_fp")), "dim_idx")
   }
 
@@ -518,11 +515,11 @@ object Similarity {
     * don't crowd the context window. Relevance is the BM25 top-20's
     * r4 score; pairwise similarity is the exact-integer quantized cosine
     * over the docs' embeddings ([[cosSimHist]] discipline — portable).
-    * The k−1 selection rounds are UNROLLED DataFrame transforms over the
-    * candidate pool (≤20 rows after the BM25 cut), so the plan is static
-    * and the only corpus-scale work is BM25 itself + one 20-row
-    * embedding fetch — MMR's cost at 100 TB is the retrieval, never the
-    * re-rank. Tie rule: r4 score desc, doc_id asc, both engines.
+    * The k−1 selection rounds run through [[graft.util.Iterate]] over the
+    * candidate pool (≤20 rows after the BM25 cut), each checkpointing the
+    * ≤k-row selected frame, so the only corpus-scale work is BM25 itself +
+    * one 20-row embedding fetch — MMR's cost at 100 TB is the retrieval,
+    * never the re-rank. Tie rule: r4 score desc, doc_id asc, both engines.
     */
   def mmrDiversity(spark: SparkSession, sfDir: String, k: Int = 5,
                    lambda: Double = 0.7): DataFrame = {
@@ -549,25 +546,23 @@ object Similarity {
       .orderBy(col("rel").desc, col("doc_id").asc).limit(1)
       .select(lit(1L).as("rank"), col("doc_id"), col("rel"),
               lit(0.0).as("maxsim"), r4(lit(lambda) * col("rel")).as("mmr_score"))
-    var selected = first
-    for (j <- 2 to k) {
+    // rounds checkpoint the ≤k-row selected frame ([[graft.util.Iterate]]):
+    // each round's pick nests ALL prior rounds' TakeOrdered subtrees, so the
+    // lazy plan grows super-linearly in k and re-plans every stage (the
+    // rakingIpf nested-margins lesson; measured 5.9 s → 1.4 s at k=5).
+    val selected = Iterate(first, k - 1)(Seq(_)) { (selected, round) =>
       val maxsim = sim
         .join(selected.select(col("doc_id").as("b_id")), "b_id")
         .groupBy(col("a_id")).agg(max(col("sim")).as("maxsim"))
       val pick = rel.join(selected.select(col("doc_id")), Seq("doc_id"),
                           "left_anti")
         .join(maxsim, col("doc_id") === col("a_id"))
-        .select(lit(j.toLong).as("rank"), col("doc_id"), col("rel"),
+        .select(lit(round + 1L).as("rank"), col("doc_id"), col("rel"),
                 col("maxsim"),
                 r4(lit(lambda) * col("rel") -
                    lit(1.0 - lambda) * col("maxsim")).as("mmr_score"))
         .orderBy(col("mmr_score").desc, col("doc_id").asc).limit(1)
-      // eager localCheckpoint on the ≤k-row selected frame: each round's
-      // pick nests ALL prior rounds' TakeOrdered subtrees, so the lazy
-      // plan grows super-linearly in k and re-plans every stage (the
-      // rakingIpf nested-margins lesson; measured 5.9 s → 1.4 s at k=5).
-      // The checkpointed frame is k rows — driver-trivial at any scale.
-      selected = selected.unionByName(pick).localCheckpoint(true)
+      selected.unionByName(pick).localCheckpoint(true)
     }
     ordered(selected, "rank")
   }

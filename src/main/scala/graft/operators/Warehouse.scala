@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Iterate
 import graft.util.Tables._
 
 /** Warehouse tier: incremental watermarks, SCD merges, fact upserts, CDC
@@ -933,27 +934,26 @@ object Warehouse {
     * itself, doubling the pointer distance, so a depth-d hierarchy
     * converges in ⌈log₂ d⌉ rounds of same-key shuffles instead of d —
     * at 100 TB the round count, not the row count, is what hurts. Rounds
-    * are lineage-truncated (localCheckpoint) like the connected-components
-    * loop; convergence is an exact emptiness check, and composing through
-    * a root is stable (root maps to itself with 0 steps). The oracle is
+    * are lineage-truncated through [[graft.util.Iterate]]; convergence is
+    * an exact emptiness check, and composing through a root is stable
+    * (root maps to itself with 0 steps). The 64-round cap is never reached:
+    * doubling covers any chain shorter than 2^64 steps. The oracle is
     * DuckDB's WITH RECURSIVE — the hash gate proves log-round jumping ≡
     * row-at-a-time recursion.
     */
   def hierarchyFlatten(spark: SparkSession, sfDir: String): DataFrame = {
-    var m = t(spark, sfDir, "part")
+    val m0 = t(spark, sfDir, "part")
       .select(col("p_partkey").as("node"))
       .withColumn("anc", when(col("node") < 10, col("node"))
                            .otherwise(expr("node div 10")))
       .withColumn("d", when(col("node") < 10, lit(0L)).otherwise(lit(1L)))
       .localCheckpoint(true)
-    var converged = false
-    while (!converged) {
+    val m = Iterate(m0, 64)(
+        Seq(_), (_, next) => next.filter(col("anc") >= 10).isEmpty) { (m, _) =>
       val j = m.select(col("node").as("jn"), col("anc").as("janc"), col("d").as("jd"))
-      val next = m.join(j, m("anc") === col("jn"))
+      m.join(j, m("anc") === col("jn"))
         .select(m("node"), col("janc").as("anc"), (m("d") + col("jd")).as("d"))
         .localCheckpoint(true)
-      converged = next.filter(col("anc") >= 10).isEmpty
-      m = next
     }
     ordered(m.select(col("node").as("p_partkey"), col("anc").as("root_key"),
                      col("d").as("depth")),

@@ -26,9 +26,9 @@ package graft
   * picks well — the only new hot-path semantics (minhash signature
   * agreement) again fit the `Expression` tier
   * ([[graft.functions.SignatureMatchCount]], `sig_match`). The iterative
-  * connected-components driver needs lineage control (localCheckpoint per
-  * round), which no custom plan node would remove — it is a property of
-  * iteration, not of planning.
+  * loops need lineage control (the per-round checkpoints of
+  * [[graft.util.Iterate]]), which no custom plan node would remove — it is
+  * a property of iteration, not of planning.
   *
   * If a future round needs whole-operator semantics (e.g. a native as-of
   * join), the growth path is: custom `LogicalPlan` + `Rule[LogicalPlan]` +

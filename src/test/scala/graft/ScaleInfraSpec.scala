@@ -356,13 +356,13 @@ class ScaleInfraSpec extends SparkSpec {
     // (connected-components label propagation, hierarchy pointer jumping).
     // Their round count is a runtime property of the data — the same
     // reason GraphX's Pregel runs a job per superstep — so they cannot be
-    // one static plan; each round is lineage-truncated via localCheckpoint
-    // and those checkpoints are the only legal build-time jobs in the
+    // one static plan; their rounds run through graft.util.Iterate, whose
+    // per-round checkpoints are the only legal build-time jobs in the
     // registry. (q_kcore briefly joined this set with eager per-round
     // checkpoints; that cost 1.6 s → 4.7 s isolated for zero result
     // difference, so its bounded rounds went back to lazy persist marks —
-    // long-lived sessions use Insights.kcoreFixpoint, whose eager rounds
-    // unpersist as they go.)
+    // long-lived sessions use Insights.kcoreFixpoint, whose Iterate rounds
+    // free superseded frames as they go.)
     val iterative = Set("q_doc_dedup_components", "q_dedup_components_editdist",
                         "q_doc_dedup_embed", "q_hierarchy",
                         // built ON dedupComponentsEditdist's CC fixpoint, so
@@ -370,14 +370,15 @@ class ScaleInfraSpec extends SparkSpec {
                         "q_dup_cluster_hist", "q_dup_by_source",
                         // per-round L1 normalization: the 1-Long global
                         // mass is COLLECTED each superstep and rounds are
-                        // eager localCheckpoints (both lazy variants
+                        // eager Iterate checkpoints (both lazy variants
                         // measured geometrically worse — 54-67 s vs ~2 s
                         // at sf0.1; Insights.hits in-body comment)
                         "q_hits",
-                        // same shape: power-iteration rounds checkpoint and
-                        // collect the exact L1 normalizer (a DECIMAL whose
-                        // floor-div exceeds Long at the 100x decade, so it
-                        // splices back as a decimal literal)
+                        // same shape: power-iteration Iterate rounds
+                        // checkpoint and collect the exact L1 normalizer
+                        // (a DECIMAL whose floor-div exceeds Long at the
+                        // 100x decade, so it splices back as a decimal
+                        // literal)
                         "q_embed_pca_power",
                         // greedy sequential selection: round j's pick
                         // depends on rounds 1..j-1's VALUES, and the lazy
@@ -386,8 +387,9 @@ class ScaleInfraSpec extends SparkSpec {
                         // rakingIpf plan-nesting lesson); the checkpointed
                         // frame is k rows, driver-trivial at any scale
                         "q_mmr_diversity",
-                        // IVFPQ: the coarse fit and the 4 PQ codebooks are
-                        // <=16/<=8-row frames referenced from ~10 legs
+                        // IVFPQ: the coarse fit and the tagged union of the
+                        // 4 PQ codebooks are one-shot leaf checkpoints of
+                        // <=16/<=32-row frames referenced from ~10 legs
                         // (residuals, probe cells, ADC tables, code
                         // assignments); lazy marks re-analyzed the fit
                         // subtrees per reference — 22.3 s at sf0.1 (11.7 s

@@ -220,4 +220,21 @@ class VectorFunctionsSpec extends SparkSpec {
     val e = intercept[Exception] { bad.collect() }
     assert(e.getMessage != null)
   }
+
+  test("vec_sum_q rejects a NULL element instead of adding 0") {
+    GraftFunctions.register(spark)
+    import spark.implicits._
+    // a scanned row carries UnsafeArrayData, an in-plan array() literal
+    // GenericArrayData — both element accessors must see the NULL
+    val scanned = Seq((1, Seq(Option(1L), None))).toDF("g", "qv")
+    val built = spark.range(1).select(lit(1).as("g"),
+      array(lit(1L), lit(null).cast("bigint")).as("qv"))
+    Seq(scanned, built).foreach { d =>
+      val e = intercept[Exception] {
+        d.groupBy(col("g")).agg(call_function("vec_sum_q", col("qv"))).collect()
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[IllegalArgumentException]), e.toString)
+    }
+  }
 }
