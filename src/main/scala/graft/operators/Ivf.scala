@@ -72,6 +72,22 @@ object Ivf {
     * [[trainCentroids]] so the same fit runs at both levels of the
     * hierarchical quantizer ([[assignListsHier]] fits the coarse level
     * over the fine-centroid frame with it).
+    *
+    * Size bound of the `_cents` carry: the (centroid_id, pos) aggregate is
+    * a SortAggregate that holds one group at a time, but the carried array
+    * (k·dim floats) rides on every exploded (point, pos) row into the
+    * map-side sort ahead of it, so a round sorts n·dim rows of about
+    * 4.5·k·dim bytes each (the sorter spills rather than fail). The
+    * registry's float fits are k = 16 ([[trainCentroids]]) and
+    * k = nCoarse ≈ √nLists (the coarse level), at dim 64 and n ≤ 2,000
+    * points at sf0.1: about 0.6 GB sorted per round. That is the bound the
+    * shape is safe for: n·k ≤ 32,000 at dim 64. A fit at n = [[TrainCap]]
+    * or k = 256 needs the carry moved onto the pos = 0 rows before the
+    * explode.
+    *
+    * Zero-row `points`: the first round's `first(_p2)` runs over no rows,
+    * so `_cents` becomes NULL; the final explode turns it into zero
+    * centroid rows, as many as the (empty) init holds.
     */
   private def kmeansFit(points: DataFrame, k: Int, iters: Int): DataFrame = {
     graft.functions.GraftFunctions.register(points.sparkSession)
@@ -346,6 +362,23 @@ object Ivf {
               expr(s"transform(_s, x -> x div _n)").as(outCol))
   }
 
+  /** Integer Lloyd's fit with the empty-cell carry (the flat gated fits).
+    *
+    * Size bound of the `first(_cents)` carry: the per-cell aggregate is an
+    * ObjectHashAggregate (`vec_sum_q` is a typed imperative aggregate), so
+    * a task holds up to k group buffers at once, each with its own copy of
+    * the k·dim-long array: k²·dim·8 bytes per task. Registry fits run at
+    * k = nLists = 16 and k = nCoarse ≈ √nLists (the hierarchical coarse
+    * level); the `Decade` adaptive sizing reaches k = 256, which at dim 64
+    * is 34 MB per task. That is the bound the shape is safe for:
+    * k²·dim ≤ 2²². A flat fit at k = 2048 would hold 2.1 GB per task, and
+    * the object-aggregate fallback, which counts groups (65,536), would
+    * not catch it.
+    *
+    * Zero-row `points`: the first round's `first(_prev)` runs over no rows,
+    * so `_cents` becomes NULL; the final explode turns it into zero
+    * centroid rows, as many as the (empty) init holds.
+    */
   private def gatedKmeansFit(points: DataFrame, k: Int, iters: Int): DataFrame = {
     val init = points
       .withColumn("tile", ntile(k).over(Window.orderBy(col("vec_id"))))

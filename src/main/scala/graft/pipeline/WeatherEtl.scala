@@ -13,10 +13,16 @@ import graft.operators.Warehouse
   *   → dimInsertNew (sql:43–47) → factMerge (sql:50–70)
   *   → markProcessed (sql:73)
   *
-  * Each stage is lazy, so Catalyst optimizes across the whole composition;
-  * the in-place UPDATE/MERGE statements of the reference become new
-  * immutable snapshots (no row locks, partition-parallel rewrite — the only
-  * shape that works at 100 TB).
+  * Each stage function alone is lazy. [[runBatch]] cleans the batch once,
+  * as the reference cleans its staging table once in place: one hash
+  * exchange on `city_name` feeds all three cleaning windows ([[clean]]),
+  * and two eager `localCheckpoint`s (the cleaned batch and the new
+  * dimension) are what the three returned snapshots read, so no commit
+  * re-plans or re-runs the cleaning. The checkpoint blocks stay live while
+  * a returned frame is reachable; Spark's ContextCleaner frees them once
+  * the frames are dropped. The in-place UPDATE/MERGE statements of the
+  * reference become new immutable snapshots (no row locks,
+  * partition-parallel rewrite — the only shape that works at 100 TB).
   *
   * Schemas are the weather fixtures of FIXTURES.md §B, mirroring the
   * reference DDL (README.md:81–113).
@@ -33,14 +39,18 @@ object WeatherEtl {
     * dedup against each other — already-processed rows pass through
     * untouched, and a duplicate spanning a processed and an unprocessed row
     * keeps both (the reference never compares across the flag either).
+    * The flag is a window key, so the stage reads its input once and keeps
+    * a `city_name` partitioning (a filter per flag and a union would read
+    * it twice); rows with a NULL flag are neither processed nor
+    * unprocessed and are dropped.
     */
   def dedupStaging(stg: DataFrame): DataFrame = {
-    val w = Window.partitionBy(StagingKeys.map(col): _*)
+    val w = Window.partitionBy((StagingKeys :+ "is_processed").map(col): _*)
       .orderBy(col("temp_max").desc_nulls_last, col("temp_min").desc_nulls_last,
                col("precipitation").desc_nulls_last)
-    val deduped = stg.filter(!col("is_processed"))
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
-    stg.filter(col("is_processed")).unionByName(deduped)
+    stg.filter(col("is_processed").isNotNull)
+      .withColumn("rn", row_number().over(w))
+      .filter(col("is_processed") || col("rn") === 1).drop("rn")
   }
 
   /** Stage 2 — missing-value imputation (ref transform_load.sql:20–24):
@@ -63,18 +73,29 @@ object WeatherEtl {
   /** Stage 3 — z-score outlier capping (ref transform_load.sql:27–38):
     * |x−μ|/σ > 3 per city ⇒ replace with μ. σ=0 or NULL (constant or 1-row
     * city) keeps the original value — SQL Server would error on div/0;
-    * Spark would silently NaN (SURVEY §2 op 10 trap).
+    * Spark would silently NaN (SURVEY §2 op 10 trap). The per-city
+    * statistics are window aggregates, so a `city_name`-partitioned input
+    * needs no exchange and no broadcast. A NULL city has no statistics
+    * row in the reference's join and is dropped.
     */
   def capOutliers(stg: DataFrame): DataFrame = {
-    val stats = stg.groupBy(col("city_name"))
-      .agg(avg(col("temp_max")).as("mu"), stddev_samp(col("temp_max")).as("sigma"))
+    val w = Window.partitionBy(col("city_name"))
     val keep = col("sigma").isNull || col("sigma") === 0.0 ||
                abs(col("temp_max") - col("mu")) / col("sigma") <= 3.0
-    stg.join(broadcast(stats), Seq("city_name"))
+    stg.filter(col("city_name").isNotNull)
+      .withColumn("mu", avg(col("temp_max")).over(w))
+      .withColumn("sigma", stddev_samp(col("temp_max")).over(w))
       .withColumn("temp_max",
         when(keep, col("temp_max")).otherwise(col("mu").cast("decimal(5,2)")))
       .drop("mu", "sigma")
   }
+
+  /** Stages 1–3 over one hash exchange on `city_name`: that partitioning
+    * clusters every window the three stages use — (city, date) for dedup,
+    * (city, month) for impute, city for capping. Lazy.
+    */
+  def clean(stg: DataFrame): DataFrame =
+    capOutliers(imputeMissing(dedupStaging(stg.repartition(col("city_name")))))
 
   /** Stage 4 — dimension insert-new (ref transform_load.sql:43–47):
     * never-seen city names enter with NULL attributes but get surrogate
@@ -118,14 +139,15 @@ object WeatherEtl {
   def markProcessed(stg: DataFrame): DataFrame =
     stg.withColumn("is_processed", lit(true))
 
-  /** The full composed batch: returns (cleanedStaging, newDim, newFact,
-    * processedStaging) — the snapshots a driver would write back.
+  /** The full composed batch: returns (newDim, newFact, processedStaging),
+    * the snapshots a driver writes back. Eager: the cleaned batch and the
+    * new dimension are materialized once here (two local checkpoints), and
+    * the three returned frames read them.
     */
   def runBatch(stg: DataFrame, dim: DataFrame, fact: DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
-    val cleaned = capOutliers(imputeMissing(dedupStaging(stg)))
-    val newDim = dimInsertNew(dim, cleaned)
-    val newFact = factMerge(fact, cleaned, newDim)
-    (newDim, newFact, markProcessed(cleaned))
+    val cleaned = clean(stg).localCheckpoint()
+    val newDim = dimInsertNew(dim, cleaned).localCheckpoint()
+    (newDim, factMerge(fact, cleaned, newDim), markProcessed(cleaned))
   }
 }

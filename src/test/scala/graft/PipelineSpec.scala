@@ -1,6 +1,10 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, REPARTITION_BY_COL,
+  ShuffleExchangeExec}
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import graft.pipeline.WeatherEtl
 
@@ -55,6 +59,56 @@ class PipelineSpec extends SparkSpec {
               col("prec_s").cast("decimal(5,2)").as("precipitation"),
               lit("2024-01-01 00:00:00").cast("timestamp").as("load_timestamp"))
   }
+
+  /** A seeded batch of 330-odd rows over Jan–Apr 2024: five cities, two of
+    * them absent from `dim`; about one key in ten duplicated; NULL temps;
+    * one planted >3σ temp_max per city; and already-processed rows, some
+    * sharing a key with an unprocessed row.
+    */
+  private def seeded: DataFrame = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val climate = Seq("London" -> 8.0, "Dubai" -> 30.0, "Oslo" -> -2.0,
+                      "Lahore" -> 25.0, "Sydney" -> 22.0)
+    val start = java.time.LocalDate.of(2024, 1, 1)
+    def temp(mu: Double) = if (rnd.nextDouble() < 0.05) None else Some(mu + 2 * rnd.nextGaussian())
+    val base = for {
+      (city, mu) <- climate
+      day <- 0 until 120 by 2
+    } yield {
+      // the outlier keeps both temps, so imputation cannot overwrite it
+      val (tmax, tmin) =
+        if (day == 20) (Some(mu + 40.0), Some(mu - 8)) else (temp(mu), temp(mu - 8))
+      (city, start.plusDays(day).toString, tmax, tmin, rnd.nextInt(50) / 10.0,
+       rnd.nextDouble() < 0.1)
+    }
+    val dups = base.filter(_ => rnd.nextDouble() < 0.1).map {
+      case (c, d, tx, tn, pr, _) =>
+        (c, d, tx.map(_ + rnd.nextInt(3) - 1), tn, pr, rnd.nextDouble() < 0.3)
+    }
+    (base ++ dups).toDF("city_name", "date_s", "tmax", "tmin", "prec", "is_processed")
+      .select(col("city_name"), col("date_s").cast("date").as("date"),
+              col("tmax").cast("decimal(5,2)").as("temp_max"),
+              col("tmin").cast("decimal(5,2)").as("temp_min"),
+              col("prec").cast("decimal(5,2)").as("precipitation"),
+              col("is_processed"))
+  }
+
+  /** Existing facts for `seeded`: London's January keys (matched by the
+    * merge) and one Dubai key outside the batch (carried unchanged).
+    */
+  private def seededFact: DataFrame = {
+    import spark.implicits._
+    ((1 to 31).map(d => (1, f"2024-01-$d%02d")) :+ ((2, "2023-12-31")))
+      .toDF("city_id", "date_s")
+      .select(col("city_id"), col("date_s").cast("date").as("date"),
+              lit("1.00").cast("decimal(5,2)").as("temp_max"),
+              lit("0.00").cast("decimal(5,2)").as("temp_min"),
+              lit("0.00").cast("decimal(5,2)").as("precipitation"),
+              lit("2024-01-01 00:00:00").cast("timestamp").as("load_timestamp"))
+  }
+
+  private object Plans extends AdaptiveSparkPlanHelper
 
   test("dedup keeps exactly one deterministic row per (city, date)") {
     val d = WeatherEtl.dedupStaging(stg)
@@ -196,5 +250,70 @@ class PipelineSpec extends SparkSpec {
     val f2 = WeatherEtl.factMerge(f1.withColumn("load_timestamp", current_timestamp()),
                                   cleaned, d2).drop("load_timestamp")
     assert(f1.exceptAll(f2).isEmpty && f2.exceptAll(f1).isEmpty)
+  }
+
+  /** runBatch's three outputs equal the unshared stage composition over
+    * the raw input, ignoring the merge's load_timestamp.
+    */
+  private def assertSharedEqualsUnshared(stg: DataFrame, fact: DataFrame): Unit = {
+    val (newDim, newFact, processed) = WeatherEtl.runBatch(stg, dim, fact)
+    val cleaned = WeatherEtl.capOutliers(WeatherEtl.imputeMissing(WeatherEtl.dedupStaging(stg)))
+    val dim0 = WeatherEtl.dimInsertNew(dim, cleaned)
+    val pairs = Seq(
+      "dim" -> (newDim, dim0),
+      "fact" -> (newFact.drop("load_timestamp"),
+                 WeatherEtl.factMerge(fact, cleaned, dim0).drop("load_timestamp")),
+      "staging" -> (processed, WeatherEtl.markProcessed(cleaned)))
+    pairs.foreach { case (name, (shared, unshared)) =>
+      assert(shared.columns.toSeq === unshared.columns.toSeq, name)
+      assert(shared.exceptAll(unshared).isEmpty && unshared.exceptAll(shared).isEmpty, name)
+    }
+  }
+
+  test("runBatch equals the unshared composition on the quirk fixture") {
+    assertSharedEqualsUnshared(stg, fact)
+  }
+
+  test("runBatch equals the unshared composition on a seeded four-month batch") {
+    val s = seeded
+    // the fixture exercises every quirk the stages handle
+    assert(s.count() > 300)
+    assert(s.filter(col("is_processed")).count() > 0)
+    assert(s.filter(col("temp_max").isNull || col("temp_min").isNull).count() > 0)
+    assert(s.filter(!col("is_processed")).groupBy("city_name", "date").count()
+      .filter(col("count") > 1).count() > 0)
+    assert(s.select(month(col("date"))).distinct().count() >= 3)
+    assert(s.join(dim, Seq("city_name"), "left_anti").select("city_name").distinct().count() === 2)
+    val imputed = WeatherEtl.imputeMissing(WeatherEtl.dedupStaging(s))
+    val capped = WeatherEtl.capOutliers(imputed)
+    assert(capped.exceptAll(imputed).count() >= 5) // the planted outliers are capped
+    assertSharedEqualsUnshared(s, seededFact)
+  }
+
+  test("cleaning over the city-partitioned batch plans one exchange and no broadcast") {
+    val chained = WeatherEtl.capOutliers(WeatherEtl.imputeMissing(
+      WeatherEtl.dedupStaging(seeded.repartition(col("city_name")))))
+    Seq(chained, WeatherEtl.clean(seeded)).foreach { df =>
+      df.collect() // settle the adaptive plan
+      val plan = df.queryExecution.executedPlan
+      val shuffles = Plans.collectWithSubqueries(plan) { case e: ShuffleExchangeExec => e }
+      assert(shuffles.map(_.shuffleOrigin) === Seq(REPARTITION_BY_COL), plan)
+      assert(Plans.collectWithSubqueries(plan) { case b: BroadcastExchangeExec => b }.isEmpty, plan)
+    }
+  }
+
+  test("runBatch cleans once: two checkpoints, no cache entry, no Window in the outputs") {
+    // the session is shared with earlier suites, which may leave cached frames
+    spark.sharedState.cacheManager.clearCache()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val (newDim, newFact, processed) = WeatherEtl.runBatch(seeded, dim, seededFact)
+    val added = spark.sparkContext.getPersistentRDDs -- before
+    assert(added.size === 2 && added.values.forall(_.isCheckpointed))
+    assert(spark.sharedState.cacheManager.isEmpty)
+    Seq(newDim, newFact, processed).foreach { df =>
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      assert(Plans.collectWithSubqueries(plan) { case w: WindowExec => w }.isEmpty, plan)
+    }
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -86,6 +87,53 @@ class PropertySpec extends SparkSpec {
           abs(col("temp_max") - col("mu")) > 0.01)
         assert(bad.isEmpty)
       }
+    }
+  }
+
+  test("dedup equals the filter-and-union reference over mixed processed flags") {
+    forAll(Gen.listOfN(30, rowGen)) { rows =>
+      // about a third of the rows flagged processed, by a hash of the row
+      val stg = toStg(rows).withColumn("is_processed",
+        pmod(hash(col("city_name"), col("date"), col("temp_max"), col("precipitation")),
+             lit(3)) === 0)
+      val w = Window.partitionBy(col("city_name"), col("date"))
+        .orderBy(col("temp_max").desc_nulls_last, col("temp_min").desc_nulls_last,
+                 col("precipitation").desc_nulls_last)
+      val ref = stg.filter(col("is_processed")).unionByName(
+        stg.filter(!col("is_processed")).withColumn("rn", row_number().over(w))
+          .filter(col("rn") === 1).drop("rn"))
+      val d = WeatherEtl.dedupStaging(stg)
+      assert(d.exceptAll(ref).isEmpty && ref.exceptAll(d).isEmpty)
+    }
+  }
+
+  test("window capOutliers equals the group-aggregate + join reference") {
+    // appended to every random batch: a one-row city, a zero-variance city
+    // with a NULL temp_max, a city with one >3σ value, and a NULL city
+    val edge: List[(String, String, Option[Double], Option[Double], Double)] =
+      ("Perth", "2024-01-05", Option(20.0), Option(10.0), 0.0) ::
+      ("Quito", "2024-01-01", None, Option(9.0), 0.0) ::
+      (1 to 3).map(d => ("Quito", f"2024-01-0${d + 1}", Option(15.0), Option(9.0), 0.0)).toList :::
+      (1 to 15).map(d => ("Nuuk", f"2024-01-$d%02d", Option(if (d == 7) 50.0 else 10.0),
+                          Option(1.0), 0.0)).toList :::
+      List((null, "2024-01-03", Option(5.0), Option(1.0), 0.0))
+    forAll(Gen.listOfN(25, rowGen)) { rows =>
+      val stg = WeatherEtl.dedupStaging(toStg(rows ++ edge))
+      val stats = stg.groupBy(col("city_name"))
+        .agg(avg(col("temp_max")).as("mu"), stddev_samp(col("temp_max")).as("sigma"))
+      val keep = col("sigma").isNull || col("sigma") === 0.0 ||
+                 abs(col("temp_max") - col("mu")) / col("sigma") <= 3.0
+      val ref = stg.join(stats, Seq("city_name"))
+        .withColumn("temp_max",
+          when(keep, col("temp_max")).otherwise(col("mu").cast("decimal(5,2)")))
+        .drop("mu", "sigma")
+      val capped = WeatherEtl.capOutliers(stg)
+      assert(capped.columns.toSeq === ref.columns.toSeq)
+      assert(capped.exceptAll(ref).isEmpty && ref.exceptAll(capped).isEmpty)
+      // the planted Nuuk outlier is replaced by its city mean, 12.67
+      assert(capped.filter(col("city_name") === "Nuuk" && col("temp_max") > 12.0)
+        .select(col("temp_max").cast("string")).collect().map(_.getString(0)).toSeq ===
+        Seq("12.67"))
     }
   }
 
