@@ -35,6 +35,9 @@ class MinHashAggregator(numHashes: Int = 32)
   /** Per-permutation salts, precomputed once per executor: re-deriving
     * hashInt(seed) inside the per-shingle loop would allocate a ByteBuffer
     * and run an extra hash 32× per shingle (measured ~2× aggregate cost).
+    * Matches Spark's xxhash64(lit(seed), col): the int seed hashes first
+    * with default seed 42, its result seeds the string hash — exactly
+    * Catalyst's XxHash64 fold over multiple children.
     */
   @transient private lazy val seedHashes: Array[Long] =
     Array.tabulate(numHashes)(s => hashInt(s, 42L))
@@ -50,11 +53,6 @@ class MinHashAggregator(numHashes: Int = 32)
     }
     buf
   }
-
-  /** Matches Spark's xxhash64(lit(seed), col): the int seed hashes first
-    * with default seed 42, its result seeds the string hash — exactly
-    * Catalyst's XxHash64 fold over multiple children.
-    */
 
   /** Catalyst XxHash64Function.hashInt: ints hash as 4-byte little-endian. */
   private def hashInt(i: Int, seed: Long): Long = {

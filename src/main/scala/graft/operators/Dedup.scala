@@ -137,11 +137,6 @@ object Dedup {
       .groupBy(col("doc_id")).agg(mh(col("s").cast("binary")).as("sig"))
   }
 
-  /** Banding + hot-bucket-capped candidates + agreement estimate over a
-    * (doc_id, sig) signature table — the full scored candidate stream
-    * (no order/limit), shared by the top-k queries and the component
-    * clustering below.
-    */
   /** Explodes a (doc_id, sig, …) signature frame to one row per LSH band:
     * band hash = xxhash64 over the band's signature slice. Map-only.
     */
@@ -155,6 +150,11 @@ object Dedup {
       }: _*)).as(Seq("band_id", "band_hash")): _*)
   }
 
+  /** Banding + hot-bucket-capped candidates + agreement estimate over a
+    * (doc_id, sig) signature table — the full scored candidate stream
+    * (no order/limit), shared by the top-k queries and the component
+    * clustering below.
+    */
   def scoredPairs(sigs: DataFrame): DataFrame = {
     val banded = bandExplode(sigs)
     val cand = bucketCandidates(banded, Seq("band_id", "band_hash"), "doc_id", Seq("sig"))
@@ -564,6 +564,19 @@ object Dedup {
       "new_id")
   }
 
+  /** Word-shingle Carter–Wegman band candidate pairs (hot-bucket-capped)
+    * for an ARBITRARY (doc_id, text) frame — the candidate leg of
+    * [[lshRecallGated]] exposed at frame level so specs can drive it over
+    * synthetic mass-duplicate corpora where the cap actually bites (the
+    * real testdata's clone groups sit under [[HotBucketCap]], so the
+    * registry query measures recall 1.0 there — the spec proves the
+    * metric MOVES when the cap truncates a 200-member bucket).
+    */
+  def wordMinhashCandidates(docs: DataFrame): DataFrame =
+    bucketCandidates(bandedGatedFrom(wordShingleRows(docs)),
+                     Seq("band_id", "bkey"), "doc_id", Seq())
+      .select(col("doc_id_a").as("doc_a"), col("doc_id_b").as("doc_b"))
+
   /** Measured LSH recall — the index-quality report every near-dup
     * pipeline owes its operators: what fraction of the TRUE J ≥ ½ pairs
     * (exact word-shingle Jaccard, [[graft.operators.Text
@@ -582,19 +595,6 @@ object Dedup {
     * the comparison itself is one semi-join on pair keys plus three
     * 1-row aggregates.
     */
-  /** Word-shingle Carter–Wegman band candidate pairs (hot-bucket-capped)
-    * for an ARBITRARY (doc_id, text) frame — the candidate leg of
-    * [[lshRecallGated]] exposed at frame level so specs can drive it over
-    * synthetic mass-duplicate corpora where the cap actually bites (the
-    * real testdata's clone groups sit under [[HotBucketCap]], so the
-    * registry query measures recall 1.0 there — the spec proves the
-    * metric MOVES when the cap truncates a 200-member bucket).
-    */
-  def wordMinhashCandidates(docs: DataFrame): DataFrame =
-    bucketCandidates(bandedGatedFrom(wordShingleRows(docs)),
-                     Seq("band_id", "bkey"), "doc_id", Seq())
-      .select(col("doc_id_a").as("doc_a"), col("doc_id_b").as("doc_b"))
-
   def lshRecallGated(spark: SparkSession, sfDir: String,
                      num: Int = 1, den: Int = 2): DataFrame = {
     import org.apache.spark.storage.StorageLevel

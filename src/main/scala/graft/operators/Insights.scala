@@ -264,14 +264,6 @@ object Insights {
       "c_mktsegment", "rn")
   }
 
-  /** Two-sample Kolmogorov–Smirnov statistic (BUILDING vs MACHINERY
-    * account balances): D = max over the pooled support of |F₁(x) − F₂(x)|.
-    * The support collapses to distinct values by a hash aggregation; both
-    * cumulative counts come from the two-phase [[PrefixSum]] scan (no
-    * global single-reducer window); each ECDF gap is two exact-count
-    * divisions and one subtraction, and max() is order-independent — the
-    * whole statistic is bit-deterministic.
-    */
   /** Mann–Whitney U (Wilcoxon rank-sum) two-sample test — the
     * nonparametric "did group A's distribution shift vs B" test that
     * doesn't assume normality (the rank-based partner of the A/B z-test
@@ -406,6 +398,14 @@ object Insights {
                r4(num / sqrt(denx * deny)).as("rho"))
   }
 
+  /** Two-sample Kolmogorov–Smirnov statistic (BUILDING vs MACHINERY
+    * account balances): D = max over the pooled support of |F₁(x) − F₂(x)|.
+    * The support collapses to distinct values by a hash aggregation; both
+    * cumulative counts come from the two-phase [[PrefixSum]] scan (no
+    * global single-reducer window); each ECDF gap is two exact-count
+    * divisions and one subtraction, and max() is order-independent — the
+    * whole statistic is bit-deterministic.
+    */
   def ksTest(spark: SparkSession, sfDir: String): DataFrame = {
     val v = t(spark, sfDir, "customer")
       .filter(col("c_mktsegment").isin("BUILDING", "MACHINERY"))
@@ -2171,22 +2171,6 @@ object Insights {
                r4(tStat).as("t"), r4(df).as("df"))
   }
 
-  /** Theil–Sen slope of the monthly quantity series per return-flag
-    * segment — the robust trend MAGNITUDE estimator that pairs with
-    * [[mkTrend]]'s Mann–Kendall direction test (the standard published
-    * combination: MK says "is there a monotone trend", Sen says "how steep",
-    * both immune to outliers a least-squares fit would chase). Same
-    * AGGREGATE-FIRST shape as mkTrend: the fact table collapses to ≤ months
-    * rows per group before the O(m²) pair join, so pair volume is a
-    * CALENDAR property at any fact scale. Slope per pair = Δvalue/Δmonths
-    * with Δvalue DECIMAL-exact and Δmonths an exact integer month index
-    * difference (year·12+month — never a day-count approximation), the
-    * division being the single IEEE op, mirrored in the oracle. The median
-    * slope is the exact lower median (element ⌈k/2⌉ of the slope sort,
-    * tie-broken by pair id) picked by a per-group window over the
-    * calendar-bounded pair frame — deterministic, hashable, no
-    * interpolation between doubles.
-    */
   /** Adamic–Adar link prediction over the part co-purchase graph — the
     * standard common-neighbor score AA(x,y) = Σ_{v ∈ N(x)∩N(y)} 1/ln(deg v)
     * (Adamic & Adar 2003), ranking NON-adjacent part pairs by how many
@@ -3955,6 +3939,22 @@ object Insights {
                 "(rss_r - rss_u) / (rss_u / cast(n - 3 as double))")).as("f_stat"))
   }
 
+  /** Theil–Sen slope of the monthly quantity series per return-flag
+    * segment — the robust trend MAGNITUDE estimator that pairs with
+    * [[mkTrend]]'s Mann–Kendall direction test (the standard published
+    * combination: MK says "is there a monotone trend", Sen says "how steep",
+    * both immune to outliers a least-squares fit would chase). Same
+    * AGGREGATE-FIRST shape as mkTrend: the fact table collapses to ≤ months
+    * rows per group before the O(m²) pair join, so pair volume is a
+    * CALENDAR property at any fact scale. Slope per pair = Δvalue/Δmonths
+    * with Δvalue DECIMAL-exact and Δmonths an exact integer month index
+    * difference (year·12+month — never a day-count approximation), the
+    * division being the single IEEE op, mirrored in the oracle. The median
+    * slope is the exact lower median (element ⌈k/2⌉ of the slope sort,
+    * tie-broken by pair id) picked by a per-group window over the
+    * calendar-bounded pair frame — deterministic, hashable, no
+    * interpolation between doubles.
+    */
   def theilSen(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val monthly = t(spark, sfDir, "lineitem")

@@ -262,25 +262,6 @@ object Ivf {
       .limit(k)
   }
 
-  /** IVF under the EXACT hash gate — the gated twin of [[ivfTopK]],
-    * putting the ENTIRE mechanism (bounded sample → spaced init → Lloyd's
-    * iterations → inverted-list assignment → nprobe pruning → re-rank)
-    * under the DuckDB oracle. Portability swaps, one per float hazard:
-    *  - metric: integer SQUARED L2 over fixed-point components
-    *    (floor(v·10⁴+0.5) + 16384 — the offset keeps every value
-    *    positive, so Spark's truncating `div` and DuckDB's flooring `//`
-    *    agree on the centroid means; a common offset cancels in every
-    *    distance). All argmins compare exact BIGINTs — no IEEE anywhere.
-    *  - sample: top-[[TrainCap]] by md5(vec_id) (portable hash order)
-    *    instead of xxhash64.
-    *  - centroid means: integer floor-division, positive domain.
-    * Assignment is the same map-only folded-centroid argmin as
-    * production ([[assignLists]] shape) with ties to the lowest id
-    * (id-sorted struct array + first-position match ≡ the oracle's
-    * row_number over (d, cid)). Output is the integer-L2 top-k — the
-    * twin gates mechanism, not cosine values, which stay the production
-    * path's job.
-    */
   /** Fixed-point positive-offset integer form of the embeddings —
     * the shared input of every gated integer-L2 path.
     */
@@ -321,15 +302,6 @@ object Ivf {
   private def gatedL2(a: Column, b: Column): Column =
     call_function("sq_l2", a, b)
 
-  /** Integer Lloyd's fit over an arbitrary (vec_id, qv) point frame:
-    * spaced init (ntile over vec_id order, min-id representative per
-    * tile), `iters` rounds of map-only argmin assignment + per-dimension
-    * integer-floor means (positive domain, so Spark's `div` ≡ DuckDB's
-    * `//`), empty cells keeping their previous centroid. Factored out of
-    * [[gatedCentroids]] so the SAME fit runs at both levels of the
-    * hierarchical quantizer ([[gatedCoarseOverFine]] fits coarse centroids
-    * over the fine-centroid frame with it).
-    */
   /** Per-cell per-element integer-floor means over a (…, centroid_id, qv)
     * frame as ONE aggregate on the [[graft.functions.VecSumLong]] kernel
     * (r16, guide §2.3/§2.4 + §1.2 "per-task work"): count + vec_sum_q,
@@ -362,7 +334,14 @@ object Ivf {
               expr(s"transform(_s, x -> x div _n)").as(outCol))
   }
 
-  /** Integer Lloyd's fit with the empty-cell carry (the flat gated fits).
+  /** Integer Lloyd's fit over an arbitrary (vec_id, qv) point frame:
+    * spaced init (ntile over vec_id order, min-id representative per
+    * tile), `iters` rounds of map-only argmin assignment + per-dimension
+    * integer-floor means (positive domain, so Spark's `div` ≡ DuckDB's
+    * `//`), empty cells keeping their previous centroid. Factored out of
+    * [[gatedCentroids]] so the SAME fit runs at both levels of the
+    * hierarchical quantizer ([[gatedCoarseOverFine]] fits coarse centroids
+    * over the fine-centroid frame with it).
     *
     * Size bound of the `first(_cents)` carry: the per-cell aggregate is an
     * ObjectHashAggregate (`vec_sum_q` is a typed imperative aggregate), so
@@ -481,6 +460,25 @@ object Ivf {
       .persist(StorageLevel.MEMORY_AND_DISK)
   }
 
+  /** IVF under the EXACT hash gate — the gated twin of [[ivfTopK]],
+    * putting the ENTIRE mechanism (bounded sample → spaced init → Lloyd's
+    * iterations → inverted-list assignment → nprobe pruning → re-rank)
+    * under the DuckDB oracle. Portability swaps, one per float hazard:
+    *  - metric: integer SQUARED L2 over fixed-point components
+    *    (floor(v·10⁴+0.5) + 16384 — the offset keeps every value
+    *    positive, so Spark's truncating `div` and DuckDB's flooring `//`
+    *    agree on the centroid means; a common offset cancels in every
+    *    distance). All argmins compare exact BIGINTs — no IEEE anywhere.
+    *  - sample: top-[[TrainCap]] by md5(vec_id) (portable hash order)
+    *    instead of xxhash64.
+    *  - centroid means: integer floor-division, positive domain.
+    * Assignment is the same map-only folded-centroid argmin as
+    * production ([[assignLists]] shape) with ties to the lowest id
+    * (id-sorted struct array + first-position match ≡ the oracle's
+    * row_number over (d, cid)). Output is the integer-L2 top-k — the
+    * twin gates mechanism, not cosine values, which stay the production
+    * path's job.
+    */
   def ivfGatedTopK(spark: SparkSession, sfDir: String, k: Int = 10,
                    nLists: Int = 16, nprobe: Int = 4): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
@@ -1480,10 +1478,8 @@ object Ivf {
       batch.unpersist()
     }
     val base = SnapshotStore.readCommitted(spark, s"$root/codes")
-    val appPath = new org.apache.hadoop.fs.Path(appDir)
-    val fs = appPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val batches = fs.listStatus(appPath).filter(_.isDirectory)
-      .map(_.getPath.toString).sorted.toSeq
+    val batches = SnapshotStore.snapshotVersions(spark, appDir)
+      .map(v => f"$appDir/v$v%05d")
     val all = batches.zipWithIndex.foldLeft(
         base.withColumn("_ver", lit(0L))) { case (acc, (p, i)) =>
       acc.unionByName(spark.read.parquet(p).withColumn("_ver", lit(i + 1L)))

@@ -125,33 +125,6 @@ object Multimodal {
              / lit(255.0))),
       "doc_id", "frame_idx")
 
-  /** Perceptual-hash (average-hash) NEAR-DUPLICATE detection over decoded
-    * media — the image-dedup modality every multimodal training pipeline
-    * runs (r11-verdict item 5), on the same deterministic decode stand-in
-    * as [[decodeStub]]: the payload's byte stream (documents' UTF-8 text
-    * bytes, surfaced as per-character code points — the corpus is ASCII)
-    * plays the decoded pixel grid. The real aHash recipe, re-expressed
-    * relationally:
-    *  1. "resize" to 64 cells: character p of an L-char payload lands in
-    *     segment p·64 div L; the cell "luma" is the segment's code-point
-    *     sum (a real deployment sums pixel lumas inside the partition-
-    *     batched decoder — same shape);
-    *  2. threshold at the global mean WITHOUT division (luma·64 > total);
-    *  3. the 64 bits pack into 8 band BYTES (values 0..255) — the
-    *     SimHash-style banding key: two hashes within Hamming distance 7
-    *     must agree on ≥1 of 8 bands, so candidates are generated by an
-    *     equality JOIN on (band, value), never all-pairs;
-    *  4. verification: exact Hamming distance = Σ_bands bit_count(a⊕b)
-    *     over the 8-row band join, duplicates at ≤ `thr`, keep-lowest-id
-    *     (the [[graft.operators.Ivf.semanticDedupGated]] rule).
-    * Everything is integer arithmetic → fully DuckDB-oracled. Scale: the
-    * hash is one scan + two hash-aggs; candidate volume is Σ_{cold bucket}
-    * n·(n−1)/2 + Σ_{hot bucket} (n−1) — buckets over [[BandCap]] members
-    * star-link through their min-id anchor ([[aHashCandidates]], the
-    * MinHash-banding hot-bucket guard with MEASURED decade numbers in its
-    * scaladoc; Round12OpsSpec pins the volume bound against the real
-    * generator).
-    */
   /** The 8 aHash band bytes per document — the banding signature
     * [[mediaDedup]] joins candidates on (exposed to the spec so the
     * bucketed candidate bound is asserted against the real signature).
@@ -212,6 +185,33 @@ object Multimodal {
     coldPairs.union(hotPairs).distinct()
   }
 
+  /** Perceptual-hash (average-hash) NEAR-DUPLICATE detection over decoded
+    * media — the image-dedup modality every multimodal training pipeline
+    * runs (r11-verdict item 5), on the same deterministic decode stand-in
+    * as [[decodeStub]]: the payload's byte stream (documents' UTF-8 text
+    * bytes, surfaced as per-character code points — the corpus is ASCII)
+    * plays the decoded pixel grid. The real aHash recipe, re-expressed
+    * relationally:
+    *  1. "resize" to 64 cells: character p of an L-char payload lands in
+    *     segment p·64 div L; the cell "luma" is the segment's code-point
+    *     sum (a real deployment sums pixel lumas inside the partition-
+    *     batched decoder — same shape);
+    *  2. threshold at the global mean WITHOUT division (luma·64 > total);
+    *  3. the 64 bits pack into 8 band BYTES (values 0..255) — the
+    *     SimHash-style banding key: two hashes within Hamming distance 7
+    *     must agree on ≥1 of 8 bands, so candidates are generated by an
+    *     equality JOIN on (band, value), never all-pairs;
+    *  4. verification: exact Hamming distance = Σ_bands bit_count(a⊕b)
+    *     over the 8-row band join, duplicates at ≤ `thr`, keep-lowest-id
+    *     (the [[graft.operators.Ivf.semanticDedupGated]] rule).
+    * Everything is integer arithmetic → fully DuckDB-oracled. Scale: the
+    * hash is one scan + two hash-aggs; candidate volume is Σ_{cold bucket}
+    * n·(n−1)/2 + Σ_{hot bucket} (n−1) — buckets over [[BandCap]] members
+    * star-link through their min-id anchor ([[aHashCandidates]], the
+    * MinHash-banding hot-bucket guard with MEASURED decade numbers in its
+    * scaladoc; Round12OpsSpec pins the volume bound against the real
+    * generator).
+    */
   def mediaDedup(spark: SparkSession, sfDir: String, thr: Int = 6): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     val d = t(spark, sfDir, "documents").select(col("doc_id"), col("text"))

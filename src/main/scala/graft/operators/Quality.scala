@@ -189,14 +189,6 @@ object Quality {
       "event_type")
   }
 
-  /** Winsorization: cap values at the per-type [p05, p95] band instead of
-    * dropping them — the outlier treatment that preserves row count (vs
-    * [[outlierZscore]]/[[outlierMad]] which only FLAG). Same two-pass shape
-    * as [[imputeAvg]]: one grouped aggregate for the edges (exact
-    * percentile — portable interpolation proven by q_quantiles_exact),
-    * broadcast join-back, per-row clamp. The corpus never reshuffles; at
-    * 100 TB the second pass is a map over the scan with a tiny dim join.
-    */
   /** Seasonality-adjusted anomaly detection: a flat per-type z-score
     * ([[outlierZscore]]) flags every nightly batch spike; baselining per
     * (event_type, hour-of-day) compares each value against its OWN season.
@@ -222,6 +214,14 @@ object Quality {
       "event_id")
   }
 
+  /** Winsorization: cap values at the per-type [p05, p95] band instead of
+    * dropping them — the outlier treatment that preserves row count (vs
+    * [[outlierZscore]]/[[outlierMad]] which only FLAG). Same two-pass shape
+    * as [[imputeAvg]]: one grouped aggregate for the edges (exact
+    * percentile — portable interpolation proven by q_quantiles_exact),
+    * broadcast join-back, per-row clamp. The corpus never reshuffles; at
+    * 100 TB the second pass is a map over the scan with a tiny dim join.
+    */
   def winsorize(spark: SparkSession, sfDir: String,
                 lo: Double = 0.05, hi: Double = 0.95): DataFrame = {
     val ev = graft.util.Tables.t(spark, sfDir, "events")
@@ -266,15 +266,6 @@ object Quality {
       "c_mktsegment", "c_custkey")
   }
 
-  /** CUSUM changepoint scan over daily revenue — the drift detector for
-    * incremental loads (did the upstream feed shift mid-month?). The CUSUM
-    * curve Σ_{j≤i}(x_j − μ) is computed SCALED BY n so it stays integer-
-    * exact: dev_i = n·prefix_i − i·total (BIGINT cents through DECIMAL(38,0)
-    * products — mirrors DuckDB's HUGEINT), divided back out only at the
-    * output boundary. The window runs over the DAILY AGGREGATE (≤ ~10⁴ rows
-    * at any fact scale), never the fact table; the peak |dev| day — the
-    * changepoint estimate — is flagged by an exact integer comparison.
-    */
   /** Population Stability Index — the standard "did the feature
     * distribution drift between two periods" monitor every production ML
     * pipeline runs before trusting a trained model on new data:
@@ -328,6 +319,15 @@ object Quality {
     ordered(terms.crossJoin(broadcast(total)), "bin")
   }
 
+  /** CUSUM changepoint scan over daily revenue — the drift detector for
+    * incremental loads (did the upstream feed shift mid-month?). The CUSUM
+    * curve Σ_{j≤i}(x_j − μ) is computed SCALED BY n so it stays integer-
+    * exact: dev_i = n·prefix_i − i·total (BIGINT cents through DECIMAL(38,0)
+    * products — mirrors DuckDB's HUGEINT), divided back out only at the
+    * output boundary. The window runs over the DAILY AGGREGATE (≤ ~10⁴ rows
+    * at any fact scale), never the fact table; the peak |dev| day — the
+    * changepoint estimate — is flagged by an exact integer comparison.
+    */
   def cusumChangepoint(spark: SparkSession, sfDir: String): DataFrame = {
     val daily = t(spark, sfDir, "orders")
       .groupBy(col("o_orderdate").cast("date").as("d"))

@@ -1547,19 +1547,6 @@ object Text {
       .agg(r4(sum(col("s").cast("decimal(28,8)")).cast("double")).as("bm25"))
   }
 
-  /** Per-document n-gram novelty — the marginal-contribution diagnostic a
-    * corpus-curation pipeline ranks sources by (RefinedWeb-style "what does
-    * this doc add that the corpus doesn't already have"): the fraction of a
-    * doc's distinct 3-gram shingles whose FIRST corpus occurrence (minimum
-    * doc_id) is this document. Complements [[contamination]] (overlap with
-    * a fixed benchmark set) and [[dupSpans]] (corpus-wide repeats): novelty
-    * is per-doc and ordered, so near-dup clusters show up as one novel doc
-    * followed by near-zero-novelty copies. Plan: one shingle-keyed hash-agg
-    * for the first-occurrence map, one co-partitioned join back (same key,
-    * AQE reuses the exchange), one doc-keyed agg — no pair stage at all,
-    * linear in shingle volume at any corpus size. The shingle frame feeds
-    * both legs → persisted, the [[contamination]] rationale.
-    */
   /** Gopher-style composite quality filter (Rae et al. 2021, "Scaling
     * Language Models", Appendix A — the published repetition/format rule
     * set every LLM curation pipeline starts from) with PER-RULE boolean
@@ -1623,6 +1610,19 @@ object Text {
       "doc_id")
   }
 
+  /** Per-document n-gram novelty — the marginal-contribution diagnostic a
+    * corpus-curation pipeline ranks sources by (RefinedWeb-style "what does
+    * this doc add that the corpus doesn't already have"): the fraction of a
+    * doc's distinct 3-gram shingles whose FIRST corpus occurrence (minimum
+    * doc_id) is this document. Complements [[contamination]] (overlap with
+    * a fixed benchmark set) and [[dupSpans]] (corpus-wide repeats): novelty
+    * is per-doc and ordered, so near-dup clusters show up as one novel doc
+    * followed by near-zero-novelty copies. Plan: one shingle-keyed hash-agg
+    * for the first-occurrence map, one co-partitioned join back (same key,
+    * AQE reuses the exchange), one doc-keyed agg — no pair stage at all,
+    * linear in shingle volume at any corpus size. The shingle frame feeds
+    * both legs → persisted, the [[contamination]] rationale.
+    */
   def ngramNovelty(spark: SparkSession, sfDir: String): DataFrame = {
     val sh = shingleRows(docs(spark, sfDir))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -154,6 +154,71 @@ object Warehouse {
         .withColumn("is_processed", lit(true)),
       "event_id")
 
+  // ── change capture (ref CDC.sql:1–2), shared with graft.streaming ─────
+
+  /** The change-capture kernel: the per-key diff of two snapshots of a
+    * keyed table as (key, op, img) rows with SQL Server's `__$operation`
+    * codes — 1 = delete (old image), 2 = insert (new image), 3 and 4 =
+    * update old and new image (an update emits both rows). Keys whose
+    * value did not change emit nothing. Every capture path is this plan
+    * plus its own columns: the batch log ([[cdcAllChanges]]) and the
+    * streaming feed (`StreamOps.cdcFeedBatch`) add their `lsn`; the net
+    * views ([[cdcNetChanges]], [[cdcChanges]]) drop the op-3 rows.
+    *
+    * One keyed full-outer join; the `ina`/`inb` presence markers tell a
+    * missing side from a NULL value, and updates fan out through a per-row
+    * ≤2-element explode, never a self-join. NULL images: the update test
+    * is SQL `<>` (the rule the `q_cdc_*` oracles share), so a value that
+    * changes between NULL and non-NULL compares as NULL and is NOT
+    * captured.
+    */
+  def changeRows(prev: DataFrame, next: DataFrame, key: String,
+                 value: String): DataFrame = {
+    val ao = prev.select(col(key), col(value).as("pa"), lit(1).as("ina"))
+    val bo = next.select(col(key), col(value).as("pb"), lit(1).as("inb"))
+    bo.join(ao, Seq(key), "full_outer")
+      .select(col(key),
+        when(col("ina").isNull,
+             array(struct(lit(2L).as("op"), col("pb").as("img"))))
+        .when(col("inb").isNull,
+             array(struct(lit(1L).as("op"), col("pa").as("img"))))
+        .when(col("pa") =!= col("pb"),
+             array(struct(lit(3L).as("op"), col("pa").as("img")),
+                   struct(lit(4L).as("op"), col("pb").as("img"))))
+        .otherwise(lit(null)).as("ops"))
+      .select(col(key), explode(col("ops")).as("o"))
+      .select(col(key), col("o.op").as("op"), col("o.img").as("img"))
+  }
+
+  /** The net-apply kernel: the replica (key, p) after applying a slice of
+    * (lsn, key, op, img) change rows. Update-old images drop, each key
+    * keeps its (lsn, op)-max row, op-1 keys are deleted and 2/4 images
+    * upserted — one keyed aggregate plus an anti-join and a union of
+    * change-bounded frames. Idempotent: applying a slice to its own result
+    * changes nothing (a delete of an absent key and an upsert of an equal
+    * image are no-ops), which is what both consumers' crash-window replay
+    * rests on ([[cdcIncrementalConsume]], `StreamOps.cdcApplyBatch`).
+    */
+  def applyNetChanges(replica: DataFrame, changes: DataFrame,
+                      key: String): DataFrame = {
+    val finals = changes.filter(col("op") =!= 3L)
+      .groupBy(col(key))
+      .agg(max_by(struct(col("op"), col("img")),
+                  struct(col("lsn"), col("op"))).as("f"))
+      .select(col(key), col("f.op").as("op"), col("f.img").as("img"))
+    replica.join(finals, Seq(key), "left_anti")
+      .unionByName(finals.filter(col("op") =!= 1L)
+        .select(col(key), col("img").as("p")))
+  }
+
+  /** Display name of an `__$operation` code. At `net` grain there is no
+    * update-old row and code 4 is the plain "update".
+    */
+  private def opName(op: Column, net: Boolean = false): Column =
+    when(op === 1L, "delete").when(op === 2L, "insert")
+      .when(op === 3L, "update_old")
+      .otherwise(if (net) "update" else "update_new")
+
   /** CDC as snapshot diff (ref CDC.sql:1–2; README.md:375–384): classify
     * rows between two snapshots as insert / update / DELETE via a keyed
     * full-outer comparison — the no-Delta replacement for
@@ -170,7 +235,7 @@ object Warehouse {
               money(col("o_totalprice")).cast("decimal(30,4)").as("o_totalprice"),
               col("o_orderdate").cast("date").as("o_orderdate"),
               col("o_orderpriority"))
-    val oldSnap = orders.filter(col("o_orderdate") < lit("1997-06-01").cast("date")).as("a")
+    val oldSnap = orders.filter(col("o_orderdate") < lit("1997-06-01").cast("date"))
     // new snapshot: later cutoff (→ inserts), urgent rows restated ×1.05
     // (→ updates), 3-MEDIUM rows purged (→ deletes)
     val newSnap = orders.filter(col("o_orderdate") < lit("1998-01-01").cast("date") &&
@@ -178,16 +243,13 @@ object Warehouse {
       .withColumn("o_totalprice",
         when(col("o_orderpriority") === "1-URGENT",
              (col("o_totalprice") * lit(1.05).cast("decimal(3,2)")).cast("decimal(30,4)"))
-        .otherwise(col("o_totalprice"))).as("b")
-    val j = newSnap.join(oldSnap, col("a.o_orderkey") === col("b.o_orderkey"), "full_outer")
+        .otherwise(col("o_totalprice")))
     ordered(
-      j.select(coalesce(col("b.o_orderkey"), col("a.o_orderkey")).as("o_orderkey"),
-               r4(col("b.o_totalprice").cast("double")).as("new_price"),
-               when(col("a.o_orderkey").isNull, lit("insert"))
-                 .when(col("b.o_orderkey").isNull, lit("delete"))
-                 .when(col("a.o_totalprice") =!= col("b.o_totalprice"), lit("update"))
-                 .otherwise(lit("unchanged")).as("change_type"))
-        .filter(col("change_type") =!= "unchanged"),
+      changeRows(oldSnap, newSnap, "o_orderkey", "o_totalprice")
+        .filter(col("op") =!= 3L)
+        .select(col("o_orderkey"),
+                when(col("op") =!= 1L, r4(col("img").cast("double"))).as("new_price"),
+                opName(col("op"), net = true).as("change_type")),
       "o_orderkey")
   }
 
@@ -236,24 +298,6 @@ object Warehouse {
     }
   }
 
-  /** CDC ALL-CHANGES ordered log (ref CDC.sql:1–2 `sys.sp_cdc_enable_table`;
-    * README.md:375–384) — where [[cdcChanges]] is the two-snapshot NET
-    * diff, this is `sys.sp_cdc_get_all_changes_*`: EVERY intermediate
-    * operation across the committed version history, in LSN order, with
-    * SQL Server's `__$operation` codes (1 = delete, 2 = insert,
-    * 3 = update-old-image, 4 = update-new-image — updates emit BOTH rows,
-    * like `@row_filter_option = 'all update old'`). The history is three
-    * SnapshotStore-committed dimension versions (run-once seeding; the
-    * log itself is a pure lazy plan over the committed snapshots), so a
-    * consumer can REPLAY the log onto version 1 and reconstruct version 3
-    * exactly — Round13OpsSpec asserts that round trip.
-    *
-    * Scale: each LSN step is one keyed full-outer join of two DIMENSION
-    * snapshots (change-bounded, not fact-bounded) shuffled on the key;
-    * update rows fan out via a per-row ≤2-element array explode, never a
-    * self-join. The log is linear in versions × changed keys — the same
-    * bound the LSN-indexed change table gives SQL Server.
-    */
   /** Run-once seeding of the CDC dimension history (shared by
     * [[cdcAllChanges]] and [[cdcNetChanges]]): commits exactly the
     * missing prefix of the three [[cdcSnap]] versions, so a partial
@@ -280,33 +324,34 @@ object Warehouse {
     val (dim, vs) = ensureCdcHistory(spark, sfDir)
     val frames = vs.map(v => SnapshotStore.readCommitted(spark, dim, v))
     frames.sliding(2).zipWithIndex.map { case (pair, i) =>
-      val (a, b) = (pair.head, pair(1))
-      val ao = a.select(col("o_orderkey"), col("p").as("pa"), lit(1).as("ina"))
-      val bo = b.select(col("o_orderkey"), col("p").as("pb"), lit(1).as("inb"))
-      bo.join(ao, Seq("o_orderkey"), "full_outer")
-        .select(col("o_orderkey"),
-          when(col("ina").isNull,
-               array(struct(lit(2L).as("op"), col("pb").as("img"))))
-          .when(col("inb").isNull,
-               array(struct(lit(1L).as("op"), col("pa").as("img"))))
-          .when(col("pa") =!= col("pb"),
-               array(struct(lit(3L).as("op"), col("pa").as("img")),
-                     struct(lit(4L).as("op"), col("pb").as("img"))))
-          .otherwise(lit(null)).as("ops"))
-        .select(lit(i + 1L).as("lsn"), col("o_orderkey"),
-                explode(col("ops")).as("o"))
-        .select(col("lsn"), col("o_orderkey"), col("o.op").as("op"),
-                col("o.img").as("img"))
+      changeRows(pair.head, pair(1), "o_orderkey", "p")
+        .select(lit(i + 1L).as("lsn"), col("o_orderkey"), col("op"), col("img"))
     }.reduce(_ unionByName _)
   }
 
+  /** CDC ALL-CHANGES ordered log (ref CDC.sql:1–2 `sys.sp_cdc_enable_table`;
+    * README.md:375–384) — where [[cdcChanges]] is the two-snapshot NET
+    * diff, this is `sys.sp_cdc_get_all_changes_*`: EVERY intermediate
+    * operation across the committed version history, in LSN order, with
+    * SQL Server's `__$operation` codes (1 = delete, 2 = insert,
+    * 3 = update-old-image, 4 = update-new-image — updates emit BOTH rows,
+    * like `@row_filter_option = 'all update old'`). The history is three
+    * SnapshotStore-committed dimension versions (run-once seeding; the
+    * log itself is a pure lazy plan over the committed snapshots), so a
+    * consumer can REPLAY the log onto version 1 and reconstruct version 3
+    * exactly — Round13OpsSpec asserts that round trip.
+    *
+    * Scale: each LSN step is one keyed full-outer join of two DIMENSION
+    * snapshots (change-bounded, not fact-bounded) shuffled on the key;
+    * update rows fan out via a per-row ≤2-element array explode, never a
+    * self-join. The log is linear in versions × changed keys — the same
+    * bound the LSN-indexed change table gives SQL Server.
+    */
   def cdcAllChanges(spark: SparkSession, sfDir: String): DataFrame = {
     val steps = cdcLogRaw(spark, sfDir)
     ordered(
       steps.select(col("lsn"), col("o_orderkey"), col("op"),
-        when(col("op") === 1L, "delete").when(col("op") === 2L, "insert")
-          .when(col("op") === 3L, "update_old").otherwise("update_new")
-          .as("op_name"),
+        opName(col("op")).as("op_name"),
         r4(col("img").cast("double")).as("price")),
       "lsn", "o_orderkey", "op")
   }
@@ -329,25 +374,13 @@ object Warehouse {
   def cdcNetChanges(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.sources.SnapshotStore
     val (dim, vs) = ensureCdcHistory(spark, sfDir)
-    val first = SnapshotStore.readCommitted(spark, dim, vs.min)
-      .select(col("o_orderkey"), col("p").as("pa"), lit(1).as("ina"))
-    val last = SnapshotStore.readCommitted(spark, dim, vs.max)
-      .select(col("o_orderkey"), col("p").as("pb"), lit(1).as("inb"))
     ordered(
-      last.join(first, Seq("o_orderkey"), "full_outer")
-        .select(col("o_orderkey"),
-          when(col("ina").isNull, lit(2L))
-            .when(col("inb").isNull, lit(1L))
-            .when(col("pa") =!= col("pb"), lit(4L)).as("op"),
-          when(col("ina").isNull || col("pa") =!= col("pb"),
-               r4(col("pb").cast("double")))
-            .otherwise(r4(col("pa").cast("double"))).as("price"))
-        .filter(col("op").isNotNull)
+      changeRows(SnapshotStore.readCommitted(spark, dim, vs.min),
+                 SnapshotStore.readCommitted(spark, dim, vs.max), "o_orderkey", "p")
+        .filter(col("op") =!= 3L)
         .select(col("o_orderkey"), col("op"),
-                when(col("op") === 1L, "delete")
-                  .when(col("op") === 2L, "insert")
-                  .otherwise("update").as("op_name"),
-                col("price")),
+                opName(col("op"), net = true).as("op_name"),
+                r4(col("img").cast("double")).as("price")),
       "o_orderkey")
   }
 
@@ -400,17 +433,8 @@ object Warehouse {
     if (b < latest) {
       val delta = cdcLogRaw(spark, sfDir)
         .filter(col("lsn") > b && col("lsn") <= latest)
-      // net effect per key over the consumed slice: drop update-OLD images,
-      // keep the (lsn, op)-max row — op 1 deletes, 2/4 upsert its image
-      val finals = delta.filter(col("op") =!= 3L)
-        .groupBy(col("o_orderkey"))
-        .agg(max_by(struct(col("op"), col("img")),
-                    struct(col("lsn"), col("op"))).as("f"))
-        .select(col("o_orderkey"), col("f.op").as("op"), col("f.img").as("img"))
-      val replica = SnapshotStore.readCommitted(spark, replicaDir)
-      val next = replica.join(finals, Seq("o_orderkey"), "left_anti")
-        .unionByName(finals.filter(col("op") =!= 1L)
-          .select(col("o_orderkey"), col("img").as("p")))
+      val next = applyNetChanges(SnapshotStore.readCommitted(spark, replicaDir),
+                                 delta, "o_orderkey")
       // replica FIRST, bookmark SECOND — the crash window the replay
       // idempotency argument (and the Round14 spec) covers
       SnapshotStore.commitSnapshot(next, replicaDir)
@@ -486,10 +510,7 @@ object Warehouse {
           SnapshotStore.readCommitted(spark, s"$root/consumer/bookmark")
             .agg(max(col("lsn")).as("blsn"))))
         .select(col("lsn").cast("long").as("lsn"), col("o_orderkey"),
-          col("op"),
-          when(col("op") === 1L, "delete").when(col("op") === 2L, "insert")
-            .when(col("op") === 3L, "update_old").otherwise("update_new")
-            .as("op_name"),
+          col("op"), opName(col("op")).as("op_name"),
           r4(col("img").cast("double")).as("price"),
           least(lit(head), col("blsn")).as("low_water_mark")),
       "lsn", "o_orderkey", "op")

@@ -5,6 +5,11 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.util.Tables._
 
+/** Typed rows for [[Windows.sessionizeTyped]]'s Dataset path. */
+final case class SessEvent(user_id: Long, event_id: Long, ts_us: Long)
+final case class SessOut(user_id: Long, session_id: Long, n_events: Long,
+                         session_start_us: Long, session_end_us: Long)
+
 /** Event-time windowing tier: tumbling windows, session windows, frame-based
   * moving aggregates. Batch formulations with streaming-equivalent semantics
   * (SURVEY §2.2 "Streaming") — the same groupings run under Structured
@@ -12,11 +17,6 @@ import graft.util.Tables._
   * deterministic, oracle-checkable twin.
   * Timestamps flow as epoch-µs BIGINT (ns-parquet-safe, engine-agnostic).
   */
-/** Typed rows for [[Windows.sessionizeTyped]]'s Dataset path. */
-final case class SessEvent(user_id: Long, event_id: Long, ts_us: Long)
-final case class SessOut(user_id: Long, session_id: Long, n_events: Long,
-                         session_start_us: Long, session_end_us: Long)
-
 object Windows {
 
   private val HourUs = 3600L * 1000 * 1000
@@ -581,18 +581,6 @@ object Windows {
       "anchor")
   }
 
-  /** Per-user time-weighted average event value — the irregular-sampling
-    * mean (sensor readings, price ticks, engagement states) where each
-    * value holds until the NEXT observation: twa = Σ value·Δt / Σ Δt over
-    * lead() intervals. User-sharded window (ts_us, event_id tie-break —
-    * the [[markovTransitions]] ordering), so the sort is per-user and
-    * shuffles once on user_id. Exact: value → integer cents, Δt → BIGINT
-    * micros, products at DECIMAL(18,0)×DECIMAL(18,0) → DECIMAL-exact sums
-    * (cents·µs reaches ~1e18 and would wrap a BIGINT); the twa is one
-    * mirrored double chain (num/total/100), r4-rounded. Single-event users
-    * have no interval and zero-span users no weight — both drop on the
-    * total_us > 0 guard, mirrored as HAVING in the oracle.
-    */
   /** Daily new-vs-returning user split — the growth-accounting primitive
     * (is today's traffic acquisition or retention?) that q_retention's
     * cohort matrix summarizes but doesn't expose day-by-day. Two hash-aggs
@@ -650,6 +638,18 @@ object Windows {
       "m")
   }
 
+  /** Per-user time-weighted average event value — the irregular-sampling
+    * mean (sensor readings, price ticks, engagement states) where each
+    * value holds until the NEXT observation: twa = Σ value·Δt / Σ Δt over
+    * lead() intervals. User-sharded window (ts_us, event_id tie-break —
+    * the [[markovTransitions]] ordering), so the sort is per-user and
+    * shuffles once on user_id. Exact: value → integer cents, Δt → BIGINT
+    * micros, products at DECIMAL(18,0)×DECIMAL(18,0) → DECIMAL-exact sums
+    * (cents·µs reaches ~1e18 and would wrap a BIGINT); the twa is one
+    * mirrored double chain (num/total/100), r4-rounded. Single-event users
+    * have no interval and zero-span users no weight — both drop on the
+    * total_us > 0 guard, mirrored as HAVING in the oracle.
+    */
   def timeWeightedAvg(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts_us").asc, col("event_id").asc)

@@ -137,36 +137,32 @@ object SnapshotStore {
       .format("parquet")
       .saveAsTable(table)
 
-  /** Small-file compaction: rewrite a snapshot so each partition directory
-    * holds ~`targetRowsPerFile` rows per file instead of one sliver per
-    * upstream task. Incremental loads naturally accrete small files (one
-    * batch = a few rows per touched date); at 100 TB the resulting
-    * file-listing and task-scheduling overhead dominates read cost long
-    * before the data does. Row-count is the proxy for bytes here
-    * (row width is stable within a fact table); compaction preserves the
-    * partition layout so pruning is unaffected.
-    *
-    * Skew-safe twice over: the writer's maxRecordsPerFile cap guarantees no
-    * file exceeds the target no matter how AQE lays out tasks, and each
-    * date additionally salts across ⌈rows/target⌉ slots so a hot date's
-    * files are WRITTEN in parallel — repartitioning on part_date alone
-    * would funnel a 100M-row date through one task (one straggler writing
-    * 100 sequential files).
-    */
-  /** Versions present under a versioned snapshot root (`v00000`,
-    * `v00001`, … as written by the streaming merge bridge), ascending.
-    * Zero-padded names make lexicographic order numeric; one directory
-    * listing, no manifest — the poor-man's transaction log that suffices
-    * when writers serialize (foreachBatch guarantees that).
+  /** Versions present under an id-keyed snapshot root (`v00000`,
+    * `v00001`, … one directory per batch id, as the foreachBatch sinks in
+    * graft.streaming and the IVF append batches write them), ascending.
+    * The one listing of such roots; one directory listing, no manifest —
+    * the poor-man's transaction log that suffices when writers serialize
+    * (foreachBatch guarantees that).
     */
   def snapshotVersions(spark: SparkSession, baseDir: String): Seq[Long] = {
-    val path = new org.apache.hadoop.fs.Path(baseDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (fs, path) = fsFor(spark, baseDir)
     if (!fs.exists(path)) Seq.empty
     else fs.listStatus(path).filter(_.isDirectory)
       .map(_.getPath.getName).filter(_.matches("v\\d+"))
       .map(_.drop(1).toLong).sorted.toSeq
   }
+
+  /** The highest id-keyed version strictly below `below`, read under the
+    * given `schema` (no inference job), or None when there is none. A
+    * batch with id N reads its predecessor with `below = N`, so a batch
+    * delivered again after it wrote `vN` sees the same input as the first
+    * time, never its own output.
+    */
+  def readVersionBelow(spark: SparkSession, baseDir: String, below: Long,
+                       schema: org.apache.spark.sql.types.StructType)
+      : Option[DataFrame] =
+    snapshotVersions(spark, baseDir).filter(_ < below).lastOption
+      .map(v => spark.read.schema(schema).parquet(f"$baseDir/v$v%05d"))
 
   /** Table-level time travel — `FOR SYSTEM_TIME AS OF` at snapshot
     * granularity (the dimension-row twin is Warehouse.scd2AsOf): read the
@@ -610,6 +606,22 @@ object SnapshotStore {
     orphans.length
   }
 
+  /** Small-file compaction: rewrite a snapshot so each partition directory
+    * holds ~`targetRowsPerFile` rows per file instead of one sliver per
+    * upstream task. Incremental loads naturally accrete small files (one
+    * batch = a few rows per touched date); at 100 TB the resulting
+    * file-listing and task-scheduling overhead dominates read cost long
+    * before the data does. Row-count is the proxy for bytes here
+    * (row width is stable within a fact table); compaction preserves the
+    * partition layout so pruning is unaffected.
+    *
+    * Skew-safe twice over: the writer's maxRecordsPerFile cap guarantees no
+    * file exceeds the target no matter how AQE lays out tasks, and each
+    * date additionally salts across ⌈rows/target⌉ slots so a hot date's
+    * files are WRITTEN in parallel — repartitioning on part_date alone
+    * would funnel a 100M-row date through one task (one straggler writing
+    * 100 sequential files).
+    */
   def compactFact(spark: SparkSession, inPath: String, outPath: String,
                   targetRowsPerFile: Long): Unit = {
     val df = spark.read.parquet(inPath)

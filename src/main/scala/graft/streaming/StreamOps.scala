@@ -284,13 +284,20 @@ object StreamOps {
     * daily MERGE lifecycle (transform_load.sql:50–70) made incremental.
     *
     * Exactly-once without a transactional table format: the output dir is
-    * named by the deterministic micro-batch id and written with overwrite,
-    * so a batch replayed after failure rewrites the SAME version with the
-    * SAME content instead of double-applying; readers pick the highest
-    * complete version ([[latestSnapshot]]). This id-keyed idempotent-sink
-    * pattern is the standard foreachBatch discipline on plain object
-    * storage. Scale: the merge is [[graft.operators.Warehouse.mergeUpsert]]
-    * — with the snapshot bucketed on the key only the micro-batch shuffles.
+    * named by the micro-batch id and written with overwrite, and a batch
+    * merges onto the latest version strictly BELOW its id. A batch
+    * delivered again after its write therefore reads the same predecessor
+    * as the first time and rewrites its own version instead of
+    * double-applying (reading its own version would overwrite the
+    * directory it reads from and leave it empty). The content is the same
+    * when the redelivered rows are, except that rows of one key tying on
+    * `orderCol` pick an arbitrary winner. The query checkpoints under
+    * `baseDir/_checkpoint`, so a restart continues the batch ids; a fresh
+    * checkpoint would number from 0 again and write versions that the
+    * older, higher ones hide. This id-keyed sink is the standard
+    * foreachBatch discipline on plain object storage. Scale: the merge is
+    * [[graft.operators.Warehouse.mergeUpsert]] — with the snapshot
+    * bucketed on the key only the micro-batch shuffles.
     */
   def mergeStreamToSnapshot(stream: DataFrame, baseDir: String,
                             keys: Seq[String], updateCols: Seq[String],
@@ -298,19 +305,28 @@ object StreamOps {
       : org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .outputMode("append")
+      .option("checkpointLocation", s"$baseDir/_checkpoint")
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(keys.map(col): _*)
-          .orderBy(col(orderCol).desc)
-        val deduped = batch.withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") === 1).drop("_rn")
-        val cur = latestSnapshot(batch.sparkSession, baseDir, batch.schema)
-        graft.operators.Warehouse
-          .mergeUpsert(cur, deduped, keys, updateCols, nullSafeKeys = false)
-          .write.mode("overwrite").parquet(f"$baseDir/v$id%05d")
-        ()
+        mergeBatch(batch.toDF(), id, baseDir, keys, updateCols, orderCol)
       }
       .start()
+
+  /** One micro-batch of [[mergeStreamToSnapshot]], factored out so the
+    * replay contract is directly testable (the [[cdcFeedBatch]] pattern).
+    */
+  def mergeBatch(batch: DataFrame, id: Long, baseDir: String,
+                 keys: Seq[String], updateCols: Seq[String],
+                 orderCol: String): Unit = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(keys.map(col): _*)
+      .orderBy(col(orderCol).desc)
+    val deduped = batch.withColumn("_rn", row_number().over(w))
+      .filter(col("_rn") === 1).drop("_rn")
+    val cur = latestSnapshot(batch.sparkSession, baseDir, batch.schema, below = id)
+    graft.operators.Warehouse
+      .mergeUpsert(cur, deduped, keys, updateCols, nullSafeKeys = false)
+      .write.mode("overwrite").parquet(f"$baseDir/v$id%05d")
+  }
 
   /** Streaming ANN-index maintenance — the [[mergeStreamToSnapshot]]
     * lifecycle transposed to vectors (round 12; the reference's
@@ -393,42 +409,15 @@ object StreamOps {
     */
   def cdcFeedBatch(batch: DataFrame, id: Long, feedDir: String,
                    key: String, valueCol: String): Unit = {
-    val spark = batch.sparkSession
     val stateDir = s"$feedDir/state"
-    val p = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prior =
-      if (fs.exists(p))
-        fs.listStatus(p)
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("v"))
-          .map(_.getPath.getName.drop(1).toLong).filter(_ < id)
-      else Array.empty[Long]
-    if (prior.nonEmpty) {
-      val prev = spark.read.schema(batch.schema)
-        .parquet(f"$stateDir/v${prior.max}%05d")
-      val ao = prev.select(col(key), col(valueCol).as("pa"),
-                           lit(1).as("ina"))
-      val bo = batch.select(col(key), col(valueCol).as("pb"),
-                            lit(1).as("inb"))
-      val changes = bo.join(ao, Seq(key), "full_outer")
-        .select(col(key),
-          when(col("ina").isNull,
-               array(struct(lit(2L).as("op"), col("pb").as("img"))))
-          .when(col("inb").isNull,
-               array(struct(lit(1L).as("op"), col("pa").as("img"))))
-          .when(col("pa") =!= col("pb"),
-               array(struct(lit(3L).as("op"), col("pa").as("img")),
-                     struct(lit(4L).as("op"), col("pb").as("img"))))
-          .otherwise(lit(null)).as("ops"))
-        .select(lit(id).as("lsn"), col(key),
-                explode(col("ops")).as("o"))
-        .select(col("lsn"), col(key), col("o.op").as("op"),
-                col("o.img").as("img"))
-      changes.write.mode("overwrite")
-        .parquet(f"$feedDir/changes/v$id%05d")
-    }
+    graft.sources.SnapshotStore
+      .readVersionBelow(batch.sparkSession, stateDir, id, batch.schema)
+      .foreach { prev =>
+        graft.operators.Warehouse.changeRows(prev, batch, key, valueCol)
+          .select(lit(id).as("lsn"), col(key), col("op"), col("img"))
+          .write.mode("overwrite").parquet(f"$feedDir/changes/v$id%05d")
+      }
     batch.write.mode("overwrite").parquet(f"$stateDir/v$id%05d")
-    ()
   }
 
   /** Streaming CDC CONSUMER — the live twin of [[graft.operators
@@ -493,20 +482,13 @@ object StreamOps {
         bm.agg(max(col(c))).collect()(0).getLong(0)
       }.getOrElse(-1L)
     val fresh = batch.filter(col("lsn") > applied)
-    val finals = fresh.filter(col("op") =!= 3L)
-      .groupBy(col(key))
-      .agg(max_by(struct(col("op"), col("img")),
-                  struct(col("lsn"), col("op"))).as("f"))
-      .select(col(key), col("f.op").as("op"), col("f.img").as("img"))
     val hiRow = fresh.agg(max(col("lsn"))).collect()(0)
     // nothing above the bookmark: stale replay — skip, never re-apply old
     // images (and never churn a replica/bookmark version)
     if (hiRow.isNullAt(0)) return
     val hi = hiRow.getLong(0)
-    val replica = SnapshotStore.readCommitted(spark, replicaDir)
-    val next = replica.join(finals, Seq(key), "left_anti")
-      .unionByName(finals.filter(col("op") =!= 1L)
-        .select(col(key), col("img").as("p")))
+    val next = graft.operators.Warehouse.applyNetChanges(
+      SnapshotStore.readCommitted(spark, replicaDir), fresh, key)
     // replica FIRST, bookmark SECOND — the crash window idempotency covers
     SnapshotStore.commitSnapshot(next, replicaDir)
     SnapshotStore.commitSnapshot(
@@ -514,23 +496,18 @@ object StreamOps {
     ()
   }
 
-  /** Highest version under `baseDir`, or an empty frame of `schema` before
-    * the first commit. Version dirs are zero-padded so lexicographic max ==
-    * numeric max — one cheap listing, no manifest needed.
+  /** The latest id-keyed version under `baseDir` strictly below `below`
+    * (a foreachBatch body passes its own batch id, so a redelivered batch
+    * never reads its own output; the default reads the newest version),
+    * or an empty frame of `schema` when there is none. Versions come from
+    * [[graft.sources.SnapshotStore.readVersionBelow]] in numeric order.
     */
   def latestSnapshot(spark: SparkSession, baseDir: String,
-                     schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val path = new org.apache.hadoop.fs.Path(baseDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val versions =
-      if (fs.exists(path))
-        fs.listStatus(path).filter(_.isDirectory)
-          .map(_.getPath.getName).filter(_.startsWith("v")).sorted
-      else Array.empty[String]
-    if (versions.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(s"$baseDir/${versions.last}")
-  }
+                     schema: org.apache.spark.sql.types.StructType,
+                     below: Long = Long.MaxValue): DataFrame =
+    graft.sources.SnapshotStore.readVersionBelow(spark, baseDir, below, schema)
+      .getOrElse(spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
 
   /** End-to-end streaming corpus ingest — the three gates every
     * training-data pipeline runs at the door, composed into ONE
@@ -552,9 +529,10 @@ object StreamOps {
     *     doc_id ever seen, the 8-bytes-per-bucket state).
     *
     * Exactly-once on plain parquet: every sink dir is keyed by the
-    * deterministic micro-batch id and written with overwrite — a replayed
-    * batch rewrites the SAME versions with the SAME content (the
-    * [[mergeStreamToSnapshot]] idempotent-sink discipline). Scale shape
+    * micro-batch id and written with overwrite, and the band index is read
+    * strictly below that id — a replayed batch rewrites the SAME versions
+    * with the SAME content (the [[mergeStreamToSnapshot]] idempotent-sink
+    * discipline, durable checkpoint included). Scale shape
     * per batch: signature kernel map-side (no shingle shuffle), one band
     * shuffle of the BATCH only, one join against the bounded per-bucket
     * index, one anti-join — batch-linear, corpus never rescanned.
@@ -567,6 +545,9 @@ object StreamOps {
       : org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream
       .outputMode("append")
+      // durable, like mergeStreamToSnapshot's: the index read below keys on
+      // the batch id, which a fresh checkpoint would restart from 0
+      .option("checkpointLocation", s"$baseDir/_checkpoint")
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
         ingestBatch(batch, baseDir, rules, id)
       }
@@ -592,7 +573,7 @@ object StreamOps {
       .bandExplode(graft.operators.Dedup.minhashSignatures(clean), carry = Nil)
       .select(col("band_id"), col("band_hash"), col("doc_id"))
       .persist()
-    val prior = latestSnapshot(spark, s"$baseDir/index", IndexSchema)
+    val prior = latestSnapshot(spark, s"$baseDir/index", IndexSchema, below = id)
     // bucket minima of THIS batch ∪ the prior index, bucket-wise min
     val batchMin = banded.groupBy(col("band_id"), col("band_hash"))
       .agg(min(col("doc_id")).as("bmin"))

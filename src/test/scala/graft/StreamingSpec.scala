@@ -1001,4 +1001,114 @@ class StreamingSpec extends SparkSpec {
     assert(SnapshotStore.committedVersions(spark, s"$root/replica").size
              >= nVersions, "sanity: version listing readable")
   }
+
+  private val MergeCols = Seq("k", "status", "value", "seq")
+
+  /** Runs `body` with adaptive execution off. With it on, the exchange
+    * under a join finishes reading its input before an overwrite deletes
+    * the output directory, which hides a batch that reads the directory it
+    * overwrites; with it off the scan runs inside the writing stage.
+    */
+  private def withoutAqe(body: => Unit): Unit = {
+    val key = "spark.sql.adaptive.enabled"
+    val was = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try body finally spark.conf.set(key, was)
+  }
+
+  test("mergeBatch: the latest batch delivered again after its write " +
+       "rewrites the same version, never an empty one") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("merge_replay").toString
+    def merge(rs: Seq[(Long, String, Double, Long)], id: Long): Unit =
+      StreamOps.mergeBatch(rs.toDF(MergeCols: _*), id, base, Seq("k"),
+                           Seq("status", "value", "seq"), "seq")
+    val b1 = Seq((2L, "upd", 21.0, 3L), (3L, "new", 30.0, 4L))
+    merge(Seq((1L, "new", 10.0, 1L), (2L, "new", 20.0, 2L)), 0L)
+    merge(b1, 1L)
+    def v1() = rows(spark.read.parquet(s"$base/v00001")).toSet
+    val first = v1()
+    assert(first === Set(Seq(1L, "new", 10.0, 1L), Seq(2L, "upd", 21.0, 3L),
+                         Seq(3L, "new", 30.0, 4L)))
+    // v00001 is the latest version: the redelivery must merge onto v00000
+    // again, not read the directory it is about to overwrite
+    withoutAqe(merge(b1, 1L))
+    assert(v1() === first, "redelivered batch changed its own version")
+    assert(graft.sources.SnapshotStore.snapshotVersions(spark, base) ===
+           Seq(0L, 1L))
+  }
+
+  test("ingestBatch: the latest batch delivered again after its write " +
+       "leaves accepted, quarantine and index unchanged") {
+    import spark.implicits._
+    import graft.operators.{Check, NotNull}
+    val dir = java.nio.file.Files.createTempDirectory("ingest_replay").toString
+    val rules = Seq(NotNull("text"), Check("min_len", length(col("text")) < 10))
+    val b0 = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog today"),
+      (2L, "completely different words about spark query engines here now"),
+      (3L, "short"))
+    val b1 = Seq(
+      (4L, "the quick brown fox jumps over the lazy dog today"), // dup of 1
+      (5L, "some fresh new sentence with plenty of words inside it"),
+      (6L, "tiny"))
+    StreamOps.ingestBatch(b0.toDF("doc_id", "text"), dir, rules, 0L)
+    StreamOps.ingestBatch(b1.toDF("doc_id", "text"), dir, rules, 1L)
+    def sinks() = Seq("accepted", "quarantine", "index").map(d =>
+      rows(spark.read.parquet(s"$dir/$d/v00001")).map(_.toString).toSet)
+    val first = sinks()
+    assert(first.head.size === 1, "doc 5 accepted, its dup 4 dropped")
+    assert(first(1).size === 1, "doc 6 quarantined")
+    withoutAqe(StreamOps.ingestBatch(b1.toDF("doc_id", "text"), dir, rules, 1L))
+    assert(sinks() === first, "redelivered batch changed its own versions")
+  }
+
+  test("mergeStreamToSnapshot: a restarted query continues its batch ids, " +
+       "so the post-restart batch reaches the latest snapshot") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val base = java.nio.file.Files.createTempDirectory("merge_restart").toString
+    val mem = MemoryStream[(Long, String, Double, Long)]
+    def start() = StreamOps.mergeStreamToSnapshot(
+      mem.toDF().toDF(MergeCols: _*), base, Seq("k"),
+      Seq("status", "value", "seq"), "seq")
+    val q1 = start()
+    mem.addData((1L, "new", 10.0, 1L)); q1.processAllAvailable()
+    mem.addData((2L, "new", 20.0, 2L)); q1.processAllAvailable()
+    q1.stop()
+    val q2 = start()
+    mem.addData((3L, "new", 30.0, 3L)); q2.processAllAvailable()
+    q2.stop()
+    val schema = spark.read.parquet(s"$base/v00000").schema
+    val latest = StreamOps.latestSnapshot(spark, base, schema)
+      .orderBy("k").collect().map(_.getAs[Long]("k")).toSeq
+    assert(latest === Seq(1L, 2L, 3L), "post-restart batch is not visible")
+    assert(graft.sources.SnapshotStore.snapshotVersions(spark, base) ===
+           Seq(0L, 1L, 2L))
+  }
+
+  test("ingestStream: a restarted query continues its batch ids, so the " +
+       "post-restart batch reaches the latest band index") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("ingest_restart").toString
+    val mem = MemoryStream[(Long, String)]
+    def start() = StreamOps.ingestStream(
+      mem.toDF().toDF("doc_id", "text"), dir, Nil)
+    val q1 = start()
+    mem.addData((1L, "the quick brown fox jumps over the lazy dog today"))
+    q1.processAllAvailable()
+    mem.addData((2L, "completely different words about spark query engines here now"))
+    q1.processAllAvailable()
+    q1.stop()
+    val q2 = start()
+    mem.addData((3L, "some fresh new sentence with plenty of words inside it"))
+    q2.processAllAvailable()
+    q2.stop()
+    val vs = graft.sources.SnapshotStore.snapshotVersions(spark, s"$dir/index")
+    assert(vs === Seq(0L, 1L, 2L))
+    val canon = spark.read.parquet(f"$dir/index/v${vs.last}%05d")
+      .select("canon_id").as[Long].collect().toSet
+    assert(canon === Set(1L, 2L, 3L), "post-restart batch is not in the index")
+  }
 }
