@@ -312,8 +312,8 @@ case class DotProductF(left: Expression, right: Expression)
   * the k-means centroid-mean kernel. One aggregate expression with a
   * primitive long-array buffer replaces either 64 separate `sum(qv[i])`
   * aggregate columns (the r15 one-agg shape — ~200 expression nodes per
-  * Lloyd's round, multiplied into every copy of the carry-fit's 2^rounds
-  * lineage, which is what regressed the fit family's wall) or the
+  * Lloyd's round, multiplied into every copy of the r15 carry fit's
+  * 2^rounds lineage, which is what regressed the fit family's wall) or the
   * posexplode → groupBy(cid,pos) → collect_list chain (dim× row fan-out
   * plus two exchanges per round). Exact integer addition is associative
   * and commutative, so partial (map-side) + final aggregation is

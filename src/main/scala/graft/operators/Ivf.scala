@@ -68,22 +68,20 @@ object Ivf {
   }
 
   /** Cosine Lloyd's fit over an arbitrary (vec_id, embedding) point frame
-    * — the float twin of [[gatedKmeansFit]], factored out of
-    * [[trainCentroids]] so the same fit runs at both levels of the
+    * — the float twin of the integer [[lloyd]] [[Carry]] fit, factored out
+    * of [[trainCentroids]] so the same fit runs at both levels of the
     * hierarchical quantizer ([[assignListsHier]] fits the coarse level
-    * over the fine-centroid frame with it).
+    * over the fine-centroid frame with it). It stays a separate core: its
+    * metric is cosine and its means are DECIMAL averages cast to float,
+    * so sharing [[lloyd]] would make the core branch on its caller.
     *
     * Size bound of the `_cents` carry: the (centroid_id, pos) aggregate is
-    * a SortAggregate that holds one group at a time, but the carried array
-    * (k·dim floats) rides on every exploded (point, pos) row into the
-    * map-side sort ahead of it, so a round sorts n·dim rows of about
-    * 4.5·k·dim bytes each (the sorter spills rather than fail). The
-    * registry's float fits are k = 16 ([[trainCentroids]]) and
-    * k = nCoarse ≈ √nLists (the coarse level), at dim 64 and n ≤ 2,000
-    * points at sf0.1: about 0.6 GB sorted per round. That is the bound the
-    * shape is safe for: n·k ≤ 32,000 at dim 64. A fit at n = [[TrainCap]]
-    * or k = 256 needs the carry moved onto the pos = 0 rows before the
-    * explode.
+    * a SortAggregate that holds one group at a time, and the explode
+    * attaches the carried array (about 4.5·k·dim bytes) to each point's
+    * pos = 0 row only, so a round sorts n·dim small rows plus n copies of
+    * the array: about 9 MB at n = 2,000, k = 16, dim 64, where carrying
+    * it on every (point, pos) row sorted 0.6 GB (`q_ann_ivf`, sf0.1: the
+    * largest Sort's peak memory fell from 642 MB to 38 MB).
     *
     * Zero-row `points`: the first round's `first(_p2)` runs over no rows,
     * so `_cents` becomes NULL; the final explode turns it into zero
@@ -96,17 +94,18 @@ object Ivf {
       .groupBy(col("tile"))
       .agg(min_by(col("embedding"), col("vec_id")).as("centroid"))
       .select((col("tile") - 1).cast("int").as("centroid_id"), col("centroid"))
-    // LINEAR-lineage carry fit — the float twin of [[gatedKmeansFit]]'s
-    // r16 restructure (see its comment for the full argument): the round
+    // LINEAR-lineage carry fit, the [[lloyd]] [[Carry]] shape: the round
     // state is the ONE-ROW id-sorted struct array, each round references
     // the previous round exactly ONCE, and the empty-cell carry is an
     // in-row map-lookup merge instead of a second (plan-doubling) join
     // reference. The per-element decimal means keep the EXACT r14/r15
     // expression — posexplode → avg(v cast decimal(28,12)) per (cid, pos)
-    // — so every mean value is bit-identical; the previous array rides
-    // through the explode on the pos=0 rows only (first(..., ignoreNulls)
-    // — constant within its group, and every non-empty cell has pos=0
-    // rows), so the carried array never multiplies the shuffled state.
+    // — so every mean value is bit-identical. The previous array is put
+    // on each point's pos = 0 element INSIDE the exploded array (NULL on
+    // the others), so the sort ahead of the aggregate carries it once per
+    // point, not once per (point, pos); first(..., ignoreNulls) picks it
+    // up — constant within its group, and every non-empty cell has pos = 0
+    // rows.
     val init1 = init
       .agg(array_sort(collect_list(struct(col("centroid_id"), col("centroid"))))
         .as("_cents"))
@@ -121,12 +120,13 @@ object Ivf {
           element_at(col("_cents"),
             array_position(col("_sims"), array_max(col("_sims"))).cast("int"))
             .getField("centroid_id"))
-        .select(col("centroid_id"), col("_cents"),
-                posexplode(col("embedding")).as(Seq("pos", "v")))
+        .select(col("centroid_id"),
+                posexplode(transform(col("embedding"), (v, i) =>
+                  struct(v.as("v"), when(i === 0, col("_cents")).as("c"))))
+                  .as(Seq("pos", "e")))
         .groupBy(col("centroid_id"), col("pos"))
-        .agg(avg(col("v").cast("decimal(28,12)")).as("mv"),
-             first(when(col("pos") === 0, col("_cents")), ignoreNulls = true)
-               .as("_p1"))
+        .agg(avg(col("e.v").cast("decimal(28,12)")).as("mv"),
+             first(col("e.c"), ignoreNulls = true).as("_p1"))
         .groupBy(col("centroid_id"))
         .agg(array_sort(collect_list(struct(col("pos"), col("mv")))).as("pv"),
              first(col("_p1"), ignoreNulls = true).as("_p2"))
@@ -302,163 +302,142 @@ object Ivf {
   private def gatedL2(a: Column, b: Column): Column =
     call_function("sq_l2", a, b)
 
-  /** Per-cell per-element integer-floor means over a (…, centroid_id, qv)
-    * frame as ONE aggregate on the [[graft.functions.VecSumLong]] kernel
-    * (r16, guide §2.3/§2.4 + §1.2 "per-task work"): count + vec_sum_q,
-    * then `x div n` per element. Identical values to both prior shapes —
-    * the r14 posexplode → groupBy(cid, pos) → groupBy(cid) chain (dim×
-    * fan-out + two exchanges per round) and the r15 count + dim
-    * `sum(qv[i])` columns (one exchange but ~200 expression nodes per
-    * round, which the carry fit's 2^rounds lineage multiplied into the
-    * measured r15 fit-family wall regression): exact integer sums are
-    * partition-order-independent, every vector carries all positions so
-    * the group counts coincide, and the floor division is positive-domain
-    * `div` in all three.
+  /** How a Lloyd's round treats a cell that no point chose: [[Carry]]
+    * keeps its previous centroid (the flat fits' frozen oracles), [[Drop]]
+    * removes it (the PQ, adaptive and hierarchical oracles).
     */
-  private def gatedMeansOneAgg(assigned: DataFrame,
-                               outCol: String): DataFrame = {
-    // r16: ONE vec_sum_q aggregate (elementwise long-array sum kernel)
-    // replaces the r15 count + 64 sum(qv[i]) columns. Same exact integers
-    // — Σqv[i] per cell then the positive-domain floor division — but the
-    // round's plan is ~3 expression nodes instead of ~200, which matters
-    // because the carry fit copies the round subtree 2^rounds times (the
-    // r15 shape's Catalyst/codegen cost per lineage copy is what the r15
-    // verdict measured as the fit-family wall regression). Width adapts
-    // to the data (ADVICE r15: the getItem shape null-poisoned on a
-    // non-64-wide corpus; vec_sum_q sizes from the first row and throws
-    // on in-group mismatch).
-    assigned.groupBy(col("centroid_id"))
-      .agg(count(lit(1)).as("_n"),
-           call_function("vec_sum_q", col("qv")).as("_s"))
-      .select(col("centroid_id"),
-              expr(s"transform(_s, x -> x div _n)").as(outCol))
-  }
+  sealed trait EmptyCell
+  case object Carry extends EmptyCell
+  case object Drop extends EmptyCell
 
-  /** Integer Lloyd's fit over an arbitrary (vec_id, qv) point frame:
-    * spaced init (ntile over vec_id order, min-id representative per
-    * tile), `iters` rounds of map-only argmin assignment + per-dimension
-    * integer-floor means (positive domain, so Spark's `div` ≡ DuckDB's
-    * `//`), empty cells keeping their previous centroid. Factored out of
-    * [[gatedCentroids]] so the SAME fit runs at both levels of the
-    * hierarchical quantizer ([[gatedCoarseOverFine]] fits coarse centroids
-    * over the fine-centroid frame with it).
+  /** The integer Lloyd's fit, keyed by group: `points` is a
+    * (grp, vec_id, qv) frame and every group gets its own independent
+    * k-means, all in one plan — a single fit is one group, the PQ
+    * codebooks key by subspace, the hierarchy's fine level by coarse group.
+    * Returns (grp, centroid_id, centroid).
     *
-    * Size bound of the `first(_cents)` carry: the per-cell aggregate is an
+    *  - init: `ntile(k)` partitioned by grp, ordered by vec_id, with the
+    *    min-id point of each tile as the starting centroid (centroid_id =
+    *    tile − 1);
+    *  - state: per group one id-sorted (centroid_id, centroid) array,
+    *    folded into ONE broadcast row (map grp → array); each round
+    *    references the previous state exactly once, so the lineage grows
+    *    linearly in rounds;
+    *  - assignment: map-only `sq_l2` argmin inside the point's group, ties
+    *    to the lowest centroid_id (the oracles' `ORDER BY d, cid`);
+    *  - means: count + `vec_sum_q` + per-element `div` — exact integers,
+    *    partition-order-independent, and positive-domain (the +16384
+    *    offset of [[gatedQemb]]), so Spark's `div` ≡ DuckDB's `//`;
+    *  - empty cells: [[Carry]] rides the previous state through the means
+    *    aggregate as a `first` (constant in every group, collapsed
+    *    map-side) and keeps `coalesce(new, prev)` per cell; [[Drop]]
+    *    keeps only the cells that received points.
+    *
+    * Size bound of the [[Carry]] ride: the means aggregate is an
     * ObjectHashAggregate (`vec_sum_q` is a typed imperative aggregate), so
-    * a task holds up to k group buffers at once, each with its own copy of
-    * the k·dim-long array: k²·dim·8 bytes per task. Registry fits run at
-    * k = nLists = 16 and k = nCoarse ≈ √nLists (the hierarchical coarse
-    * level); the `Decade` adaptive sizing reaches k = 256, which at dim 64
-    * is 34 MB per task. That is the bound the shape is safe for:
-    * k²·dim ≤ 2²². A flat fit at k = 2048 would hold 2.1 GB per task, and
-    * the object-aggregate fallback, which counts groups (65,536), would
-    * not catch it.
+    * a task holds up to (groups × k) buffers, each with its own copy of the
+    * whole state (groups·k·dim longs). Carry callers fit one group, at
+    * k = nLists (16 in the registry) and k = nCoarse; k = 256 would hold
+    * 34 MB per task at dim 64 — safe while k²·dim ≤ 2²². A Carry fit at
+    * k = 2048 would hold 2.1 GB per task, and the object-aggregate
+    * fallback, which counts groups (65,536), would not catch it. [[Drop]]
+    * rides nothing, so its buffers are one dim-long sum per (group, cell).
     *
-    * Zero-row `points`: the first round's `first(_prev)` runs over no rows,
-    * so `_cents` becomes NULL; the final explode turns it into zero
-    * centroid rows, as many as the (empty) init holds.
+    * Zero-row `points`: the init fold is an empty map, every round's means
+    * are empty, and the result has zero rows under both rules.
     */
-  private def gatedKmeansFit(points: DataFrame, k: Int, iters: Int): DataFrame = {
+  private[graft] def lloyd(points: DataFrame, k: Int, iters: Int,
+                           empty: EmptyCell): DataFrame = {
+    graft.functions.GraftFunctions.register(points.sparkSession)
     val init = points
-      .withColumn("tile", ntile(k).over(Window.orderBy(col("vec_id"))))
-      .groupBy(col("tile"))
+      .withColumn("tile", ntile(k).over(
+        Window.partitionBy(col("grp")).orderBy(col("vec_id"))))
+      .groupBy(col("grp"), col("tile"))
       .agg(min_by(col("qv"), col("vec_id")).as("centroid"))
-      .select((col("tile") - 1).cast("int").as("centroid_id"), col("centroid"))
-    // LINEAR-lineage carry fit (r16, guide §2.4 / VERDICT r15 item 3 "the
-    // carry-fit broadcast-job tax"): the round state is the ONE-ROW
-    // id-sorted (centroid_id, centroid) struct array — the exact form
-    // [[gatedWithBest]] folds the k-row frame into anyway — and each round
-    // references the previous round EXACTLY ONCE (the broadcast for the
-    // argmin). The empty-cell carry that used to be a second reference
-    // (cent ⋈ means left join, doubling the logical plan per round to
-    // 2^iters copies of the sample subtree and materializing ~130
-    // single-task broadcast jobs per fit at sf0.1) is now an in-row merge:
-    // the previous array rides through the means aggregate as a
-    // `first(_cents)` column (constant within every group — partial
-    // aggregation collapses it map-side), and the new round's array is
-    // `transform(prev, c -> coalesce(newMeans[c.id], c.centroid))`.
-    // Value identity with the old k-row formulation, cell by cell:
-    //  - assignment: same id-sorted array, same sq_l2 argmin, same
-    //    first-position tie rule as [[gatedWithBest]];
-    //  - means: count + vec_sum_q + positive-domain `div`, unchanged;
-    //  - carry: map lookup misses exactly the empty cells, and coalesce
-    //    keeps their previous centroid — the left-join semantics;
-    //  - ordering: transform preserves the id-sorted order, so round r+1's
-    //    argmin sees the identical array.
-    // The oracle-gated flat-fit family proves the identity end to end.
-    val init1 = init
-      .agg(array_sort(collect_list(struct(col("centroid_id"), col("centroid"))))
-        .as("_cents"))
-
-    def step(centArr: DataFrame): DataFrame = {
-      val dists = transform(col("_cents"),
-        c => call_function("sq_l2", col("qv"), c.getField("centroid")))
-      points.crossJoin(broadcast(centArr)) // the round's ONLY prev reference
-        .withColumn("_d", dists)
-        .withColumn("centroid_id",
-          element_at(col("_cents"),
-            array_position(col("_d"), array_min(col("_d"))).cast("int"))
-            .getField("centroid_id"))
-        .groupBy(col("centroid_id"))
-        .agg(count(lit(1)).as("_n"),
-             call_function("vec_sum_q", col("qv")).as("_s"),
-             first(col("_cents")).as("_prev"))
-        .select(col("centroid_id"),
-                expr("transform(_s, x -> x div _n)").as("newc"), col("_prev"))
-        .agg(map_from_entries(collect_list(struct(col("centroid_id"),
-               col("newc")))).as("_nm"),
+      .select(col("grp"), (col("tile") - 1).cast("int").as("centroid_id"),
+              col("centroid"))
+    // one round's per-cell means over the folded `state`, with `ride`
+    // aggregated alongside; the state's ONLY reference is the broadcast
+    def means(state: DataFrame, ride: Column*): DataFrame = points
+      .crossJoin(broadcast(state))
+      .withColumn("centroid_id", nearest(element_at(col("_fm"), col("grp"))))
+      .groupBy(col("grp"), col("centroid_id"))
+      .agg(count(lit(1)).as("_n"),
+           call_function("vec_sum_q", col("qv")).as("_s") +: ride: _*)
+      .withColumn("centroid", expr("transform(_s, x -> x div _n)"))
+    // Carry's next state: the previous one, each cell's centroid replaced
+    // by its mean where the cell has one (looked up by grp·k + id)
+    def key(g: Column, cid: Column): Column = g.cast("long") * k + cid
+    def carried(state: DataFrame): DataFrame =
+      means(state, first(col("_fm")).as("_prev"))
+        .agg(map_from_entries(collect_list(struct(
+               key(col("grp"), col("centroid_id")), col("centroid")))).as("_nm"),
              first(col("_prev")).as("_prev"))
-        .select(transform(col("_prev"),
+        .select(transform_values(col("_prev"), (g, cells) => transform(cells,
           c => struct(c.getField("centroid_id").as("centroid_id"),
-                      coalesce(element_at(col("_nm"), c.getField("centroid_id")),
-                               c.getField("centroid")).as("centroid")))
-          .as("_cents"))
+                      coalesce(element_at(col("_nm"), key(g, c.getField("centroid_id"))),
+                               c.getField("centroid")).as("centroid"))))
+          .as("_fm"))
+    require(iters >= 1, s"lloyd needs at least one round, got $iters")
+    val last = (2 to iters).foldLeft(foldByGroup(init)) { (state, _) =>
+      if (empty == Drop) foldByGroup(means(state)) else carried(state)
     }
-    // back to the k-row (centroid_id, centroid) caller contract
-    (1 to iters).foldLeft(init1)((c, _) => step(c))
-      .select(explode(col("_cents")).as("c"))
-      .select(col("c.centroid_id").as("centroid_id"),
+    // the final round's cells: Drop's means ARE the cells (folding and
+    // unfolding them again measurably slowed the hierarchy's planning);
+    // Carry unfolds its merged state
+    if (empty == Drop) means(last).select(col("grp"), col("centroid_id"), col("centroid"))
+    else carried(last)
+      .select(explode(col("_fm")).as(Seq("grp", "_a")))
+      .select(col("grp"), explode(col("_a")).as("c"))
+      .select(col("grp"), col("c.centroid_id").as("centroid_id"),
               col("c.centroid").as("centroid"))
   }
 
-  /** LINEAR-lineage integer Lloyd's fit: like [[gatedKmeansFit]] but
-    * empty cells are DROPPED instead of carried forward — the standard
-    * drop-empty-cluster k-means variant. Dropping the carry removes the
-    * round's SECOND reference to the previous centroid frame (the left
-    * join), so the logical plan grows linearly in rounds instead of
-    * 2^rounds — at the 100× decade the doubled lineage re-executed every
-    * round's windows/broadcasts up to 2^5 times ([[gatedKmeansFit]]'s
-    * note; caching can't fix it without breaking laziness). Used by the
-    * hierarchical pipeline, whose oracle mirrors the drop-empty rule;
-    * the FLAT fits keep the carry variant because their frozen oracles
-    * state it.
+  /** Folds a (grp, centroid_id, centroid) frame into ONE broadcastable
+    * row: `_fm`, a map grp → id-sorted (centroid_id, centroid) array —
+    * [[lloyd]]'s round state and the hierarchy's fine routing table.
     */
-  private def gatedKmeansFitLinear(points: DataFrame, k: Int,
-                                   iters: Int): DataFrame = {
-    val init = points
-      .withColumn("tile", ntile(k).over(Window.orderBy(col("vec_id"))))
-      .groupBy(col("tile"))
-      .agg(min_by(col("qv"), col("vec_id")).as("centroid"))
-      .select((col("tile") - 1).cast("int").as("centroid_id"), col("centroid"))
-    // one-exchange per-cell means per round (r16; [[gatedMeansOneAgg]])
-    def step(cent: DataFrame): DataFrame =
-      gatedMeansOneAgg(gatedWithBest(points, cent), "centroid")
-    (1 to iters).foldLeft(init)((c, _) => step(c))
-  }
+  private def foldByGroup(cells: DataFrame): DataFrame = cells
+    .groupBy(col("grp"))
+    .agg(array_sort(collect_list(struct(col("centroid_id"), col("centroid"))))
+      .as("_a"))
+    .agg(map_from_entries(collect_list(struct(col("grp"), col("_a")))).as("_fm"))
+
+  /** [[lloyd]] over ONE group: a (vec_id, qv) frame in, the
+    * (centroid_id, centroid) frame out.
+    */
+  private def lloydFlat(points: DataFrame, k: Int, iters: Int,
+                        empty: EmptyCell): DataFrame =
+    lloyd(points.select(lit(0).as("grp"), col("vec_id"), col("qv")), k, iters, empty)
+      .drop("grp")
+
+  /** The id of the centroid nearest `qv` (integer squared L2) in an array
+    * of (centroid_id, centroid) structs, ties to the lowest id: one pass,
+    * a lexicographic struct-min on (d, id).
+    */
+  private def nearest(cells: Column): Column =
+    array_min(transform(cells,
+      c => struct(gatedL2(col("qv"), c.getField("centroid")).as("d"),
+                  c.getField("centroid_id").as("id"))))
+      .getField("id")
+
+  /** The md5-ordered bounded training sample: top-[[TrainCap]] rows by
+    * md5(vec_id) (a portable hash order, unlike xxhash64), persisted
+    * because every fit round scans it.
+    */
+  private def md5Sample(df: DataFrame): DataFrame = df
+    .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
+    .limit(TrainCap)
+    .persist(StorageLevel.MEMORY_AND_DISK)
 
   /** The gated k-means fit: md5-ordered bounded sample, spaced init,
-    * [[Iters]] Lloyd's rounds over exact integers. Returns the persisted
-    * (centroid_id, centroid) frame. Shared by [[ivfGatedTopK]] and
-    * [[semanticDedupGated]].
+    * [[Iters]] [[Carry]] Lloyd's rounds over exact integers. Returns the
+    * persisted (centroid_id, centroid) frame. Shared by [[ivfGatedTopK]]
+    * and [[semanticDedupGated]].
     */
-  private[graft] def gatedCentroids(qemb: DataFrame, nLists: Int): DataFrame = {
-    val sample = qemb
-      .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      .limit(TrainCap)
+  private[graft] def gatedCentroids(qemb: DataFrame, nLists: Int): DataFrame =
+    lloydFlat(md5Sample(qemb), nLists, Iters, Carry)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    gatedKmeansFit(sample, nLists, Iters)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-  }
 
   /** IVF under the EXACT hash gate — the gated twin of [[ivfTopK]],
     * putting the ENTIRE mechanism (bounded sample → spaced init → Lloyd's
@@ -623,25 +602,41 @@ object Ivf {
     qemb.select(col("vec_id"),
                 slice(col("qv"), s * PqSubDim + 1, PqSubDim).as("qv"))
 
-  /** The per-subspace PQ codebooks: drop-empty integer Lloyd's fits
-    * ([[gatedKmeansFitLinear]] — linear lineage) over the md5-sampled
-    * sub-vectors, one independent fit per subspace, each persisted (every
-    * caller scans them several times). Returns (subspace, codebook) where
-    * codebook = (centroid_id, centroid sub-vector).
+  /** The [[PqSubs]] independent PQ codebooks as ONE [[Drop]] fit keyed by
+    * subspace: each sample row of `sample` (vec_id, `vec`) becomes its
+    * PqSubs sub-vectors with grp = subspace, so the four fits share one
+    * plan — init, rounds and means all group by subspace. Returns the
+    * persisted-table schema (subspace, code, centroid).
+    */
+  private def pqFit(sample: DataFrame, vec: String, codes: Int): DataFrame =
+    lloyd(sample.select(explode(sequence(lit(0L), lit(PqSubs - 1L))).as("grp"),
+                        col("vec_id"), col(vec))
+            .select(col("grp"), col("vec_id"),
+                    slice(col(vec), col("grp").cast("int") * PqSubDim + 1,
+                          lit(PqSubDim)).as("qv")),
+          codes, Iters, Drop)
+      .select(col("grp").as("subspace"), col("centroid_id").as("code"),
+              col("centroid"))
+
+  /** Subspace `s`'s (centroid_id, centroid) codebook out of a [[pqFit]]
+    * table.
+    */
+  private def codebook(cbs: DataFrame, s: Int): DataFrame =
+    cbs.filter(col("subspace") === s)
+      .select(col("code").as("centroid_id"), col("centroid"))
+
+  /** The raw-vector PQ codebooks over the md5-sampled corpus — one
+    * [[pqFit]], persisted (every caller scans it several times). Returns
+    * (subspace, codebook) where codebook = (centroid_id, centroid
+    * sub-vector).
     */
   private def pqCodebooks(spark: SparkSession, sfDir: String,
                           codes: Int): (DataFrame, Seq[(Int, DataFrame)]) = {
     graft.functions.GraftFunctions.register(spark)
     val qemb = gatedQemb(t(spark, sfDir, "embeddings"))
-    val sample = qemb
-      .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      .limit(TrainCap)
+    val cbs = pqFit(md5Sample(qemb), "qv", codes)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val cbs = (0 until PqSubs).map { s =>
-      s -> gatedKmeansFitLinear(pqSliced(sample, s), codes, Iters)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    }
-    (qemb, cbs)
+    (qemb, (0 until PqSubs).map(s => s -> codebook(cbs, s)))
   }
 
   /** PQ codebook build report under the EXACT hash gate: per (subspace,
@@ -740,35 +735,34 @@ object Ivf {
   private case class IvfPqParts(cents: DataFrame, resid: DataFrame,
                                 probeCells: DataFrame, topk: DataFrame)
 
-  private def annIvfPqParts(spark: SparkSession, sfDir: String, nLists: Int,
-                            nprobe: Int, codes: Int, k: Int): IvfPqParts = {
+  /** The IVFPQ fit shared by [[annIvfPq]] and [[buildIvfPqIndex]]: md5
+    * sample → [[Drop]] coarse fit → residuals r = qv − centroid(cell) →
+    * md5 sample of the residuals → one subspace-keyed [[pqFit]]. Both
+    * fits are [[Drop]] because the IVFPQ oracles pin the drop-empty rule.
+    * `samples` are the two persisted training samples, for callers that
+    * release them.
+    */
+  private case class IvfPqFit(qemb: DataFrame, cents: DataFrame,
+                              resid: DataFrame, codebooks: DataFrame,
+                              samples: Seq[DataFrame])
+
+  private def ivfPqFit(spark: SparkSession, sfDir: String, nLists: Int,
+                       codes: Int): IvfPqFit = {
     graft.functions.GraftFunctions.register(spark)
     val qemb = gatedQemb(t(spark, sfDir, "embeddings"))
-    // coarse fit is the LINEAR drop-empty variant, not the shared carry
-    // fit: this query references the centroid frame from MANY legs
-    // (residuals, probe cells, per-cell tables), and the carry fit's
-    // 2^rounds logical-plan doubling multiplied through them measured
-    // 158 s of pure planning at sf0.1 — the gatedKmeansFit scaladoc's
-    // CacheManager/AQE canonicalization wall. The drop-empty fit keeps
-    // lineage linear (the semanticDedupHier rule) and this query's oracle
-    // pins the drop-empty arithmetic from birth.
-    val csample = qemb
-      .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      .limit(TrainCap)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val csample = md5Sample(qemb)
     // EAGER lineage truncation on the fitted frames (the q_mmr_diversity /
     // q_hits exemption class, recorded in ScaleInfraSpec's laziness spec):
-    // cents is <=nLists rows and the codebooks <=codes rows each, but their
-    // fit chains are deep — and this query references them from ~10 legs
-    // (residuals, probe cells, 4 ADC tables, 4 assignments). Lazy persist
-    // marks leave every reference re-analyzing the full fit subtree:
-    // measured 22.3 s at sf0.1 lazy (11.7 s of pure Catalyst analysis at
-    // sf0.001) vs ~3 s with the fits checkpointed to leaves. The
+    // cents is <=nLists rows and the codebooks <=PqSubs·codes rows, but
+    // their fit chains are deep — and [[annIvfPq]] references them from
+    // ~10 legs (residuals, probe cells, 4 ADC tables, 4 assignments).
+    // Lazy persist marks leave every reference re-analyzing the full fit
+    // subtree: with both fits keyed, `q_ann_ivf_pq` took 20.6–27.4 s lazy
+    // vs 5.9–6.8 s checkpointed (fresh JVMs, sf0.1, 4 cores). The
     // checkpointed frames are driver-trivial at any corpus scale.
-    val cents = gatedKmeansFitLinear(csample, nLists, Iters)
-      .localCheckpoint(true)
-    // residual frame: r = qv − centroid(cell), per vector (map-only + one
-    // broadcast join against the nLists-row centroid table)
+    val cents = lloydFlat(csample, nLists, Iters, Drop).localCheckpoint(true)
+    // residual frame: map-only argmin + one broadcast join against the
+    // nLists-row centroid table
     val resid = gatedWithBest(qemb, cents)
       .join(broadcast(cents), "centroid_id")
       .select(col("vec_id"), col("centroid_id").as("cell"),
@@ -778,12 +772,16 @@ object Ivf {
       // extra copy of the corpus in executor storage; with cents a leaf,
       // resid's own lineage is shallow and the lazy mark suffices
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val sample = resid
-      .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      .limit(TrainCap)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val cbUnion = fitCodebooks(sample, codes)
-    val cbs = (0 until PqSubs).map(s => s -> codebook(cbUnion, s))
+    val rsample = md5Sample(resid)
+    val codebooks = pqFit(rsample, "rv", codes).localCheckpoint(true)
+    IvfPqFit(qemb, cents, resid, codebooks, Seq(csample, rsample))
+  }
+
+  private def annIvfPqParts(spark: SparkSession, sfDir: String, nLists: Int,
+                            nprobe: Int, codes: Int, k: Int): IvfPqParts = {
+    val IvfPqFit(qemb, cents, resid, cbAll, _) =
+      ivfPqFit(spark, sfDir, nLists, codes)
+    val cbs = (0 until PqSubs).map(s => s -> codebook(cbAll, s))
     // probe machinery: nprobe nearest cells, then a residual PER CELL
     val probe = qemb.filter(col("vec_id") === 0)
       .select(col("qv").as("pq")).limit(1)
@@ -892,17 +890,15 @@ object Ivf {
   // ---------------------------------------------------------------------
 
   /** Versioned on-disk root for a persisted IVFPQ index over `sfDir`'s
-    * embeddings. Keyed by corpus path + fit parameters + a format tag
-    * (bump `v1` if the fit arithmetic ever changes, so stale indexes from
-    * older code can never serve). Lives under the JVM temp dir — the
-    * stand-in for the warehouse's index volume; at a real deployment this
-    * is one line pointing at the object store.
+    * embeddings ([[graft.util.Tables.storeRoot]]: keyed on the embedding
+    * files, the fit parameters and the `ivfpq-v1` format tag). Lives
+    * under the JVM temp dir — the stand-in for the warehouse's index
+    * volume; at a real deployment this is one line pointing at the object
+    * store.
     */
-  private def indexRoot(sfDir: String, nLists: Int, codes: Int): String = {
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(sfDir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    s"${sys.props("java.io.tmpdir")}/graft-ivfpq-v1-$tag-n$nLists-c$codes"
-  }
+  private def indexRoot(spark: SparkSession, sfDir: String, nLists: Int,
+                        codes: Int): String =
+    storeRoot(spark, sfDir, Seq("embeddings"), "ivfpq-v1", s"-n$nLists-c$codes")
 
   /** 1-based 16-dim residual slice for subspace `s` over a (vec_id, cell,
     * rv) frame — the shared slicer of the build and serve paths.
@@ -911,35 +907,10 @@ object Ivf {
     df.select(col("vec_id"), col("cell"),
               slice(col("rv"), s * PqSubDim + 1, PqSubDim).as("qv"))
 
-  /** The [[PqSubs]] independent drop-empty PQ codebook fits over a
-    * residual sample, as ONE subspace-tagged (subspace, code, centroid)
-    * union checkpointed eagerly to a leaf: the fits are <=codes rows each
-    * but their chains are deep, and their readers (ADC tables, code
-    * assignments) would otherwise re-analyze every fit subtree (the
-    * [[annIvfPq]] exemption class). One action over the union lets AQE
-    * submit the four chains' stages side by side, so the fits overlap
-    * without a driver thread per fit.
-    */
-  private def fitCodebooks(sample: DataFrame, codes: Int): DataFrame =
-    (0 until PqSubs).map { s =>
-      gatedKmeansFitLinear(rvSlice(sample, s).select(col("vec_id"), col("qv")),
-                           codes, Iters)
-        .select(lit(s.toLong).as("subspace"),
-                col("centroid_id").as("code"), col("centroid"))
-    }.reduce(_ unionByName _).localCheckpoint(true)
-
-  /** Subspace `s`'s (centroid_id, centroid) codebook out of a
-    * [[fitCodebooks]] union.
-    */
-  private def codebook(cbUnion: DataFrame, s: Int): DataFrame =
-    cbUnion.filter(col("subspace") === s)
-      .select(col("code").as("centroid_id"), col("centroid"))
-
   /** Build and PERSIST the IVFPQ index (idempotent — returns immediately
     * when a committed index already exists): exactly [[annIvfPq]]'s fit
-    * (linear drop-empty coarse k-means over the md5 sample, residual
-    * encoding, 4 independent drop-empty PQ codebooks over residual
-    * sub-vectors), then three SnapshotStore tables under the index root —
+    * ([[ivfPqFit]]), then three SnapshotStore tables under the index
+    * root —
     *  - `centroids`: (centroid_id, centroid) — nLists rows;
     *  - `codebooks`: (subspace, code, centroid) — 4·codes rows;
     *  - `codes`:     (vec_id, cell, code_0..code_3) — ONE row per corpus
@@ -955,32 +926,15 @@ object Ivf {
   def buildIvfPqIndex(spark: SparkSession, sfDir: String, nLists: Int = 16,
                       codes: Int = 8): String = {
     import graft.sources.SnapshotStore
-    val root = indexRoot(sfDir, nLists, codes)
+    val root = indexRoot(spark, sfDir, nLists, codes)
     if (SnapshotStore.committedVersions(spark, s"$root/codes").nonEmpty)
       return root
-    graft.functions.GraftFunctions.register(spark)
-    val qemb = gatedQemb(t(spark, sfDir, "embeddings"))
-    val csample = qemb
-      .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      .limit(TrainCap)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val cents = gatedKmeansFitLinear(csample, nLists, Iters)
-      .localCheckpoint(true) // <=nLists rows; the annIvfPq exemption class
-    val resid = gatedWithBest(qemb, cents)
-      .join(broadcast(cents), "centroid_id")
-      .select(col("vec_id"), col("centroid_id").as("cell"),
-              zip_with(col("qv"), col("centroid"), (a, b) => a - b).as("rv"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val sample = resid
-      .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      .limit(TrainCap)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val cbUnion = fitCodebooks(sample, codes)
-    val codesDf = encodeAgainst(resid, cbUnion)
-    SnapshotStore.commitSnapshot(cents, s"$root/centroids")
-    SnapshotStore.commitSnapshot(cbUnion, s"$root/codebooks")
-    SnapshotStore.commitSnapshot(codesDf, s"$root/codes")
-    csample.unpersist(); resid.unpersist(); sample.unpersist()
+    val fit = ivfPqFit(spark, sfDir, nLists, codes)
+    SnapshotStore.commitSnapshot(fit.cents, s"$root/centroids")
+    SnapshotStore.commitSnapshot(fit.codebooks, s"$root/codebooks")
+    SnapshotStore.commitSnapshot(encodeAgainst(fit.resid, fit.codebooks),
+                                 s"$root/codes")
+    (fit.resid +: fit.samples).foreach(_.unpersist())
     root
   }
 
@@ -1262,7 +1216,7 @@ object Ivf {
     * k=142) — the decade row in SURVEY §2.41 records the measured drop.
     * The corpus count is a driver-collected 1-row scalar (data-DEPENDENT
     * sizing is the point — the laziness registry exempts this entry); the
-    * oracle mirrors the rule with ntile((SELECT k FROM params)).
+    * oracle mirrors the rule with a `(SELECT k FROM params)` tile count.
     */
   def ivfAdaptive(spark: SparkSession, sfDir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
@@ -1271,15 +1225,9 @@ object Ivf {
     val nLists = math.max(4L, math.min(256L,
       math.ceil(math.sqrt(n.toDouble)).toLong)).toInt
     val qemb = gatedQemb(emb)
-    // LINEAR drop-empty fit, not the carry variant: adaptive k reaches 142+
-    // at the decade, where the carry fit's 2^rounds plan doubling measured
-    // 26.8 s at sf0.1 (k=45) vs ~8 s linear — and this query's oracle pins
-    // the drop-empty arithmetic from birth (the annIvfPq precedent)
-    val sample = qemb
-      .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      .limit(TrainCap)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val cents = gatedKmeansFitLinear(sample, nLists, Iters)
+    // [[Drop]], because this query's oracle pins the drop-empty arithmetic
+    // from birth (the annIvfPq precedent)
+    val cents = lloydFlat(md5Sample(qemb), nLists, Iters, Drop)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val cellN = gatedWithBest(qemb, cents)
       .groupBy(col("centroid_id")).agg(count(lit(1)).as("nm"))
@@ -1649,7 +1597,7 @@ object Ivf {
       : (DataFrame, DataFrame) = {
     val finePoints = fine.select(col("centroid_id").cast("long").as("vec_id"),
                                  col("centroid").as("qv"))
-    val coarse = gatedKmeansFit(finePoints, nCoarse, CoarseIters)
+    val coarse = lloydFlat(finePoints, nCoarse, CoarseIters, Carry)
     val fineTagged = gatedWithBest(finePoints, coarse)
       .select(col("vec_id").cast("int").as("cid"), col("qv").as("fcent"),
               col("centroid_id").as("gid"))
@@ -1805,66 +1753,25 @@ object Ivf {
     graft.functions.GraftFunctions.register(spark)
     val emb = t(spark, sfDir, "embeddings")
     val qemb = gatedQemb(emb)
-    val sample = qemb
-      .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      .limit(TrainCap)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val coarse = gatedKmeansFitLinear(sample, nCoarse, CoarseIters)
+    val sample = md5Sample(qemb)
+    val coarse = lloydFlat(sample, nCoarse, CoarseIters, Drop)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val routed = gatedWithBest(sample, coarse)
-      .select(col("vec_id"), col("qv"), col("centroid_id").as("gid"))
+      .select(col("centroid_id").as("grp"), col("vec_id"), col("qv"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // group-keyed fold of a (gid, fcid, centroid) frame into ONE
-    // broadcastable row: map gid → fcid-sorted (fcid, centroid) array
-    def groupMap(cent: DataFrame): DataFrame = cent
-      .groupBy(col("gid"))
-      .agg(array_sort(collect_list(struct(col("fcid"), col("centroid"))))
-        .as("arr"))
-      .agg(map_from_entries(collect_list(struct(col("gid"), col("arr"))))
-        .as("_fm"))
-
-    // in-group argmin: one pass over the group's fine array, lexicographic
-    // struct-min on (d, fcid)
-    def bestInGroup(gidCol: Column): Column =
-      array_min(transform(element_at(col("_fm"), gidCol),
-        f => struct(gatedL2(col("qv"), f.getField("centroid")).as("d"),
-                    f.getField("fcid").as("fcid"))))
-        .getField("fcid")
-
-    val finit = routed
-      .withColumn("tile", ntile(kPerGroup)
-        .over(Window.partitionBy(col("gid")).orderBy(col("vec_id"))))
-      .groupBy(col("gid"), col("tile"))
-      .agg(min_by(col("qv"), col("vec_id")).as("centroid"))
-      .select(col("gid"), (col("tile") - 1).cast("int").as("fcid"),
-              col("centroid"))
-
-    // drop-empty grouped Lloyd's round: the previous centroid frame is
-    // referenced exactly ONCE (the routing broadcast) — linear lineage,
-    // the [[gatedKmeansFitLinear]] discipline, mirrored by the oracle
-    // per-(gid, fcid) integer means via the vec_sum_q kernel (r16 — same
-    // value-identity argument as [[gatedMeansOneAgg]]: Σqv[i] div count
-    // per element ≡ the posexplode per-(gid, fcid, pos) sum(v) div count)
-    def fstep(cent: DataFrame): DataFrame =
-      routed.crossJoin(broadcast(groupMap(cent)))
-        .withColumn("fcid", bestInGroup(col("gid")))
-        .groupBy(col("gid"), col("fcid"))
-        .agg(count(lit(1)).as("_n"),
-             call_function("vec_sum_q", col("qv")).as("_s"))
-        .select(col("gid"), col("fcid"),
-                expr("transform(_s, x -> x div _n)").as("centroid"))
-    val fine = (1 to Iters).foldLeft(finit)((c, _) => fstep(c))
+    // the nCoarse fine fits: ONE [[Drop]] fit keyed by coarse group (the
+    // oracle runs every per-group fit in the same CTEs, keyed by gid)
+    val fine = lloyd(routed, kPerGroup, Iters, Drop)
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     // corpus routing over LIVE coarse groups only (a group whose sample
     // slice was empty has no fine cells and must not attract vectors)
-    val live = coarse.join(fine.select(col("gid").as("centroid_id")).distinct(),
+    val live = coarse.join(fine.select(col("grp").as("centroid_id")).distinct(),
                            Seq("centroid_id"), "left_semi")
     val folded = live
       .agg(array_sort(collect_list(struct(col("centroid_id"), col("centroid"))))
         .as("_g"))
-      .crossJoin(groupMap(fine))
+      .crossJoin(foldByGroup(fine))
     val gd = transform(col("_g"),
       c => gatedL2(col("qv"), c.getField("centroid")))
     val asg = qemb.crossJoin(broadcast(folded))
@@ -1873,7 +1780,7 @@ object Ivf {
         element_at(col("_g"),
           array_position(col("_gd"), array_min(col("_gd"))).cast("int"))
           .getField("centroid_id"))
-      .withColumn("fcid", bestInGroup(col("gid")))
+      .withColumn("fcid", nearest(element_at(col("_fm"), col("gid"))))
       .select(col("vec_id"), col("qv"),
               (col("gid").cast("long") * kPerGroup + col("fcid")).as("cid"))
       .persist(StorageLevel.MEMORY_AND_DISK)

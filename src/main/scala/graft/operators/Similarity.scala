@@ -667,15 +667,12 @@ object Similarity {
   }
 
   /** Versioned root for the persisted scored candidate stream over
-    * `sfDir`'s embeddings — keyed by corpus path + nLists + a format tag
-    * (bump `v1` if the probe/scoring arithmetic changes, so stale streams
-    * never serve), the [[graft.operators.Ivf]] index-root discipline.
+    * `sfDir`'s embeddings — [[graft.util.Tables.storeRoot]] keyed on the
+    * embedding files, nLists and the `cands-v1` format tag (change it if
+    * the probe/scoring arithmetic changes, so stale streams never serve).
     */
-  private def candRoot(sfDir: String, nLists: Int): String = {
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(sfDir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    s"${sys.props("java.io.tmpdir")}/graft-cands-v1-$tag-n$nLists"
-  }
+  private def candRoot(spark: SparkSession, sfDir: String, nLists: Int): String =
+    storeRoot(spark, sfDir, Seq("embeddings"), "cands-v1", s"-n$nLists")
 
   /** Build and PERSIST the scored candidate superset ONCE per corpus
     * (idempotent — returns immediately when committed): the NEAR and FAR
@@ -699,7 +696,7 @@ object Similarity {
   private def buildCandidateStream(spark: SparkSession, sfDir: String,
                                    nLists: Int = 16): String = {
     import graft.sources.SnapshotStore
-    val root = candRoot(sfDir, nLists)
+    val root = candRoot(spark, sfDir, nLists)
     if (SnapshotStore.committedVersions(spark, root).nonEmpty) return root
     val pv = Ivf.gatedProbes2(spark, sfDir, nLists)
       .join(labeledQuantized(spark, sfDir), "vec_id")

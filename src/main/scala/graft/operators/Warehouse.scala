@@ -254,15 +254,12 @@ object Warehouse {
   }
 
   /** Versioned on-disk root for the CDC change-log dimension history over
-    * `sfDir` — keyed by corpus path + a format tag (bump `v1` if the
-    * snapshot derivation changes, so stale histories never serve), same
-    * discipline as the IVFPQ index root.
+    * `sfDir` — [[graft.util.Tables.storeRoot]] keyed on the `orders` files
+    * and the `cdclog-v1` format tag (change it if the snapshot derivation
+    * changes, so stale histories never serve).
     */
-  private[graft] def cdcRoot(sfDir: String): String = {
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(sfDir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    s"${sys.props("java.io.tmpdir")}/graft-cdclog-v1-$tag"
-  }
+  private[graft] def cdcRoot(spark: SparkSession, sfDir: String): String =
+    storeRoot(spark, sfDir, Seq("orders"), "cdclog-v1")
 
   /** The three deterministic dimension snapshots the ordered change log is
     * derived from (run-once committed to SnapshotStore, recomputable by
@@ -307,7 +304,7 @@ object Warehouse {
   private def ensureCdcHistory(spark: SparkSession,
                                sfDir: String): (String, Seq[Long]) = {
     import graft.sources.SnapshotStore
-    val dim = s"${cdcRoot(sfDir)}/dim"
+    val dim = s"${cdcRoot(spark, sfDir)}/dim"
     val have = SnapshotStore.committedVersions(spark, dim).size
     (have until 3).foreach(v => SnapshotStore.commitSnapshot(
       cdcSnap(spark, sfDir, v), dim))
@@ -413,7 +410,7 @@ object Warehouse {
                             maxLsn: Long = Long.MaxValue): DataFrame = {
     import graft.sources.SnapshotStore
     val (dim, vs) = ensureCdcHistory(spark, sfDir)
-    val root = rootOverride.getOrElse(s"${cdcRoot(sfDir)}/consumer")
+    val root = rootOverride.getOrElse(s"${cdcRoot(spark, sfDir)}/consumer")
     val replicaDir = s"$root/replica"
     val bookmarkDir = s"$root/bookmark"
     // seed: replica = the base snapshot at bookmark 0 (enabling CDC emits
@@ -486,7 +483,7 @@ object Warehouse {
     import graft.sources.SnapshotStore
     val (_, vs) = ensureCdcHistory(spark, sfDir)
     val head = (vs.size - 1).toLong // newest LSN in the log (= 2)
-    val root = rootOverride.getOrElse(s"${cdcRoot(sfDir)}/cleanup")
+    val root = rootOverride.getOrElse(s"${cdcRoot(spark, sfDir)}/cleanup")
     val tableDir = s"$root/changetable"
     if (SnapshotStore.committedVersions(spark, tableDir).isEmpty)
       SnapshotStore.commitSnapshotPartitioned(

@@ -107,8 +107,8 @@ object SimilaritySql {
 
   /** Per-subspace PQ fit + assignment CTE chain (round 11): the SAME
     * md5-sampled spaced-init integer k-means as the gated IVF oracles, but
-    * DROP-EMPTY (linear lineage — the gatedKmeansFitLinear rule) and run
-    * independently per 16-dim subspace. Emits, per subspace s: sl{s}
+    * DROP-EMPTY (the `Ivf.lloyd` Drop rule) and run independently per
+    * 16-dim subspace. Emits, per subspace s: sl{s}
     * (sample sub-dims), c0_{s}..c5_{s} (fit), af_{s}/bf_{s} (corpus
     * assignment, ties to lowest cid) and e{s} (per-vector integer squared
     * reconstruction error).
@@ -193,8 +193,8 @@ object SimilaritySql {
          |         CAST(sum((prl.prv - c.qv) * (prl.prv - c.qv)) AS BIGINT) AS d
          |       FROM prl JOIN rc5_$s c ON c.i = prl.i GROUP BY 1, 2),""".stripMargin
     }.mkString("\n")
-    // coarse chain: DROP-EMPTY linear fit (cc_i = means only — mirrors
-    // Spark's gatedKmeansFitLinear; this query pins the drop-empty rule)
+    // coarse chain: DROP-EMPTY fit (cc_i = means only — mirrors Spark's
+    // `Ivf.lloyd` Drop rule; this query pins the drop-empty rule)
     val coarseIters = (1 to 5).map { i =>
       s"""ca$i AS (SELECT l.vec_id, c.cid, sum((l.qv - c.qv) * (l.qv - c.qv)) AS d
          |        FROM slong l JOIN cc${i - 1} c ON c.i = l.i GROUP BY 1, 2),

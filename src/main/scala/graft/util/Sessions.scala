@@ -38,11 +38,21 @@ object Sessions {
       sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
     // The default 128-group threshold exists for UNBOUNDED object buffers
     // (collect_list): past it, ObjectHashAggregate sorts its input instead
-    // of hash-aggregating. Our only object aggregate (MinHashAggregator) has
-    // a FIXED 256 B buffer, so 64k in-flight groups bound task memory at
-    // ~16 MB — hash aggregation stays safe far past the per-partition doc
-    // counts any sane 100 TB partitioning produces, and the sort of the
-    // (much larger) pre-aggregate shingle stream never happens.
+    // of hash-aggregating. Our three typed imperative aggregates all have
+    // buffers sized by their arguments, not their input, so 64k in-flight
+    // groups bound a task's buffers at:
+    //  - MinHashAggregator (a group per doc): 32 longs, ~16 MB in all;
+    //  - CountMinAggregator (one global group): 4 × 1024 longs = 32 KB;
+    //  - VecSumLong (`vec_sum_q`, Ivf.lloyd's means, a group per (group
+    //    key, cell)): dim longs = 512 B at dim 64, ~32 MB in all; the fits
+    //    hold at most groups·k = 256 such groups.
+    // Lloyd's Carry rule also keeps a copy of the fit state (k·dim longs)
+    // in each of its k cell buffers. That k²·dim·8 B (34 MB at k = 256)
+    // grows with k, not with the group count, so this threshold does not
+    // bound it; Ivf.lloyd's scaladoc states the k it is safe for.
+    // Hash aggregation stays safe far past the per-partition doc counts any
+    // sane 100 TB partitioning produces, and the sort of the (much larger)
+    // pre-aggregate shingle stream never happens.
     c.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
     // Engine optimizer rules for already-built sessions (the
     // spark.sql.extensions=GraftExtensions path needs to be set at session

@@ -64,6 +64,34 @@ object Tables {
     } finally reader.close()
   }
 
+  /** On-disk root, under the JVM temp dir, of a build-once artifact
+    * derived from `sfDir`'s `tables`: `graft-<tag>-<key><suffix>`. The key
+    * is an md5 over the format tag, the sf path, and the path, length and
+    * modification time of every file of each input table, so rewriting an
+    * input moves the root and an artifact built from the old files can
+    * never serve. `tag` names the artifact's format (say `ivfpq-v1`):
+    * change it when the artifact's arithmetic changes. A missing table
+    * contributes no files, so the build's own read reports it.
+    */
+  def storeRoot(spark: SparkSession, sfDir: String, tables: Seq[String],
+                tag: String, suffix: String = ""): String = {
+    val conf = spark.sessionState.newHadoopConf()
+    val files = tables.flatMap { name =>
+      val path = new org.apache.hadoop.fs.Path(s"$sfDir/$name.parquet")
+      val fs = path.getFileSystem(conf)
+      if (!fs.exists(path)) Nil
+      else {
+        val it = fs.listFiles(path, true)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+          .map(f => s"${f.getPath}:${f.getLen}:${f.getModificationTime}").toList.sorted
+      }
+    }
+    val key = java.security.MessageDigest.getInstance("MD5")
+      .digest((tag +: sfDir +: files).mkString("\n").getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString.take(12)
+    s"${sys.props("java.io.tmpdir")}/graft-$tag-$key$suffix"
+  }
+
   /** `events` with the nanosecond timestamp normalized to an epoch-microsecond
     * BIGINT column `ts_us` (truncating division, matching DuckDB's ns→µs cast)
     * so every downstream comparison/window agrees with the oracle exactly.
