@@ -34,8 +34,10 @@ object StageCount {
           val d = Option(j.properties)
             .flatMap(p => Option(p.getProperty("spark.job.description")))
             .getOrElse("")
-          val cs = Option(j.properties)
-            .flatMap(p => Option(p.getProperty("callSite.short"))).getOrElse("")
+          // Spark names every stage after its job's call site
+          // ("count at X.scala:N"); `callSite.short` is only a job
+          // property when someone called setCallSite
+          val cs = j.stageInfos.headOption.map(_.name).getOrElse("")
           System.err.println(s"[job] ${j.jobId} stages=${j.stageInfos.size} cs=$cs desc=${d.take(80)}")
         }
       }

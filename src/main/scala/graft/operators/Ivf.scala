@@ -112,14 +112,8 @@ object Ivf {
 
     def step(centArr: DataFrame): DataFrame = {
       // the assignLists argmax, inlined so the round keeps `_cents`
-      val sims = transform(col("_cents"),
-        c => call_function("cosine_sim", col("embedding"), c.getField("centroid")))
       points.crossJoin(broadcast(centArr)) // the round's ONLY prev reference
-        .withColumn("_sims", sims)
-        .withColumn("centroid_id",
-          element_at(col("_cents"),
-            array_position(col("_sims"), array_max(col("_sims"))).cast("int"))
-            .getField("centroid_id"))
+        .withColumn("centroid_id", mostSimilar(col("embedding"), col("_cents")))
         .select(col("centroid_id"),
                 posexplode(transform(col("embedding"), (v, i) =>
                   struct(v.as("v"), when(i === 0, col("_cents")).as("c"))))
@@ -151,11 +145,9 @@ object Ivf {
   }
 
   /** Assign each vector to its nearest centroid by cosine — MAP-ONLY.
-    * The k-row centroid table folds into ONE broadcast row of id-sorted
-    * (centroid_id, centroid) structs; each vector then computes its sim
-    * array and takes the first position of the max. Ties resolve to the
-    * LOWEST centroid_id (the struct array is id-sorted and array_position
-    * returns the first hit — same result as max_by on (sim, -id)).
+    * The k-row centroid table folds into ONE broadcast row of
+    * (centroid_id, centroid) structs; each vector then takes
+    * [[mostSimilar]] over it (ties to the LOWEST centroid_id).
     * The corpus never shuffles: at 100 TB the index build is a single map
     * pass, where a crossJoin + groupBy(vec_id) max_by formulation would
     * re-shuffle the entire corpus with its embedding payload to reduce
@@ -163,18 +155,21 @@ object Ivf {
     */
   def assignLists(emb: DataFrame, centroids: DataFrame): DataFrame = {
     val centArr = centroids
-      .agg(array_sort(collect_list(struct(col("centroid_id"), col("centroid"))))
-        .as("_cents"))
-    val sims = transform(col("_cents"),
-      c => call_function("cosine_sim", col("embedding"), c.getField("centroid")))
+      .agg(collect_list(struct(col("centroid_id"), col("centroid"))).as("_cents"))
     emb.crossJoin(broadcast(centArr))
-      .withColumn("_sims", sims)
-      .withColumn("centroid_id",
-        element_at(col("_cents"),
-          array_position(col("_sims"), array_max(col("_sims"))).cast("int"))
-          .getField("centroid_id"))
+      .withColumn("centroid_id", mostSimilar(col("embedding"), col("_cents")))
       .select(col("vec_id"), col("embedding"), col("centroid_id"))
   }
+
+  /** The id of the cell most cosine-similar to `q` in an array of
+    * (centroid_id, centroid) structs, ties to the lowest id: a struct-max
+    * on (sim, −id) — the float twin of [[nearest]].
+    */
+  private def mostSimilar(q: Column, cells: Column): Column =
+    -array_max(transform(cells,
+      c => struct(call_function("cosine_sim", q, c.getField("centroid")).as("s"),
+                  (-c.getField("centroid_id")).as("nc"))))
+      .getField("nc")
 
   /** PRODUCTION hierarchical (coarse→fine) cell assignment — the float/
     * cosine twin of [[gatedHierAssign]], for the nLists regime where the
@@ -184,9 +179,10 @@ object Ivf {
     * over the (live) coarse groups, then over only that group's fine
     * centroids — corpus × (nCoarse + nLists/nCoarse) calls, minimized at
     * nCoarse = √nLists. Both levels fold into ONE broadcast row; the
-    * corpus never shuffles, exactly like the flat path. With nCoarse = 1
-    * the routing is exact (one group holds every fine centroid, arrays
-    * id-sorted so ties resolve identically) — the spec's equivalence
+    * corpus never shuffles, exactly like the flat path ([[hierRoute]]).
+    * With nCoarse = 1 the routing is exact (one group holds every fine
+    * centroid, and ties resolve to the lowest id at both levels, as in
+    * [[assignLists]]) — the spec's equivalence
     * anchor; larger nCoarse buys the kernel-call reduction at the
     * standard coarse-routing recall tradeoff.
     */
@@ -196,40 +192,11 @@ object Ivf {
                                  col("centroid").as("embedding"))
     val coarse = kmeansFit(finePoints, nCoarse, CoarseIters)
     val fineTagged = assignLists(finePoints, coarse)
-      .select(col("vec_id").cast("int").as("cid"), col("embedding").as("fcent"),
-              col("centroid_id").as("gid"))
-    val liveCoarse = coarse.join(
-      fineTagged.select(col("gid").as("centroid_id")).distinct(),
-      Seq("centroid_id"), "left_semi")
-    // map-folded fine level — same once-per-row discipline as
-    // [[gatedHierAssign]] (a filter-lambda would re-evaluate the coarse
-    // argmax per array element after CollapseProject inlining)
-    val fmap = fineTagged.groupBy(col("gid"))
-      .agg(array_sort(collect_list(struct(col("cid"), col("fcent")))).as("arr"))
-      .agg(map_from_entries(collect_list(struct(col("gid"), col("arr"))))
-        .as("_fm"))
-    val folded = liveCoarse
-      .agg(array_sort(collect_list(struct(col("centroid_id"), col("centroid"))))
-        .as("_g"))
-      .crossJoin(fmap)
-    val gs = transform(col("_g"),
-      c => call_function("cosine_sim", col("embedding"), c.getField("centroid")))
-    // single-pass struct-max fine stage (the [[gatedHierAssign]] shape):
-    // max similarity with ties to the LOWEST cid via the negated-cid
-    // struct field — no per-reference copying of candidate vectors
-    emb.crossJoin(broadcast(folded))
-      .withColumn("_gs", gs)
-      .withColumn("_gid",
-        element_at(col("_g"),
-          array_position(col("_gs"), array_max(col("_gs"))).cast("int"))
-          .getField("centroid_id"))
-      .withColumn("centroid_id",
-        -array_max(transform(element_at(col("_fm"), col("_gid")),
-          f => struct(call_function("cosine_sim", col("embedding"),
-                                    f.getField("fcent")).as("s"),
-                      (-f.getField("cid")).as("nc"))))
-          .getField("nc"))
-      .select(col("vec_id"), col("embedding"), col("centroid_id"))
+      .select(col("centroid_id").as("grp"), col("vec_id").cast("int").as("centroid_id"),
+              col("embedding").as("centroid"))
+    hierRoute(emb, liveGroups(coarse, fineTagged), fineTagged)(
+        mostSimilar(col("embedding"), _))
+      .select(col("vec_id"), col("embedding"), col("fcid").as("centroid_id"))
   }
 
   /** End-to-end IVF query: top-k cosine neighbors of probe vec_id=0,
@@ -279,17 +246,10 @@ object Ivf {
   private[graft] def gatedWithBest(df: DataFrame, cent: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(df.sparkSession)
     val centArr = cent
-      .agg(array_sort(collect_list(struct(col("centroid_id"), col("centroid"))))
-        .as("_cents"))
-    val dists = transform(col("_cents"),
-      c => call_function("sq_l2", col("qv"), c.getField("centroid")))
+      .agg(collect_list(struct(col("centroid_id"), col("centroid"))).as("_cents"))
     df.crossJoin(broadcast(centArr))
-      .withColumn("_d", dists)
-      .withColumn("centroid_id",
-        element_at(col("_cents"),
-          array_position(col("_d"), array_min(col("_d"))).cast("int"))
-          .getField("centroid_id"))
-      .drop("_cents", "_d")
+      .withColumn("centroid_id", nearest(col("qv"), col("_cents")).getField("id"))
+      .drop("_cents")
   }
 
   /** Integer squared L2 over two fixed-point arrays — the native
@@ -360,7 +320,8 @@ object Ivf {
     // aggregated alongside; the state's ONLY reference is the broadcast
     def means(state: DataFrame, ride: Column*): DataFrame = points
       .crossJoin(broadcast(state))
-      .withColumn("centroid_id", nearest(element_at(col("_fm"), col("grp"))))
+      .withColumn("centroid_id",
+        nearest(col("qv"), element_at(col("_fm"), col("grp"))).getField("id"))
       .groupBy(col("grp"), col("centroid_id"))
       .agg(count(lit(1)).as("_n"),
            call_function("vec_sum_q", col("qv")).as("_s") +: ride: _*)
@@ -411,15 +372,18 @@ object Ivf {
     lloyd(points.select(lit(0).as("grp"), col("vec_id"), col("qv")), k, iters, empty)
       .drop("grp")
 
-  /** The id of the centroid nearest `qv` (integer squared L2) in an array
-    * of (centroid_id, centroid) structs, ties to the lowest id: one pass,
-    * a lexicographic struct-min on (d, id).
+  /** The cell nearest the fixed-point vector `q` in an array of
+    * (centroid_id, centroid) structs, as a (d, id) struct: `d` the integer
+    * squared L2, `id` the centroid_id, ties to the lowest id (the oracles'
+    * `ORDER BY d, id`). One pass, a lexicographic struct-min on (d, id),
+    * so the array needs no order. The only gated argmin: cell assignment,
+    * Lloyd's rounds, both levels of the hierarchical routing and the PQ
+    * encode (whose `d` is the reconstruction error) all run it.
     */
-  private def nearest(cells: Column): Column =
+  private def nearest(q: Column, cells: Column): Column =
     array_min(transform(cells,
-      c => struct(gatedL2(col("qv"), c.getField("centroid")).as("d"),
+      c => struct(gatedL2(q, c.getField("centroid")).as("d"),
                   c.getField("centroid_id").as("id"))))
-      .getField("id")
 
   /** The md5-ordered bounded training sample: top-[[TrainCap]] rows by
     * md5(vec_id) (a portable hash order, unlike xxhash64), persisted
@@ -453,8 +417,8 @@ object Ivf {
     *  - centroid means: integer floor-division, positive domain.
     * Assignment is the same map-only folded-centroid argmin as
     * production ([[assignLists]] shape) with ties to the lowest id
-    * (id-sorted struct array + first-position match ≡ the oracle's
-    * row_number over (d, cid)). Output is the integer-L2 top-k — the
+    * ([[nearest]]'s (d, id) struct-min ≡ the oracle's row_number over
+    * (d, cid)). Output is the integer-L2 top-k — the
     * twin gates mechanism, not cosine values, which stay the production
     * path's job.
     */
@@ -595,13 +559,6 @@ object Ivf {
   val PqSubs = 4
   val PqSubDim = 16
 
-  /** One fixed-point sub-vector slice per subspace (1-based slice —
-    * subspace s covers dims s·16+1 .. (s+1)·16).
-    */
-  private def pqSliced(qemb: DataFrame, s: Int): DataFrame =
-    qemb.select(col("vec_id"),
-                slice(col("qv"), s * PqSubDim + 1, PqSubDim).as("qv"))
-
   /** The [[PqSubs]] independent PQ codebooks as ONE [[Drop]] fit keyed by
     * subspace: each sample row of `sample` (vec_id, `vec`) becomes its
     * PqSubs sub-vectors with grp = subspace, so the four fits share one
@@ -618,49 +575,45 @@ object Ivf {
       .select(col("grp").as("subspace"), col("centroid_id").as("code"),
               col("centroid"))
 
-  /** Subspace `s`'s (centroid_id, centroid) codebook out of a [[pqFit]]
-    * table.
-    */
-  private def codebook(cbs: DataFrame, s: Int): DataFrame =
-    cbs.filter(col("subspace") === s)
-      .select(col("code").as("centroid_id"), col("centroid"))
-
   /** The raw-vector PQ codebooks over the md5-sampled corpus — one
-    * [[pqFit]], persisted (every caller scans it several times). Returns
-    * (subspace, codebook) where codebook = (centroid_id, centroid
-    * sub-vector).
+    * [[pqFit]], persisted (the encode pass and the ADC tables both read
+    * it). Returns (the fixed-point corpus, the (subspace, code, centroid)
+    * codebooks).
     */
   private def pqCodebooks(spark: SparkSession, sfDir: String,
-                          codes: Int): (DataFrame, Seq[(Int, DataFrame)]) = {
+                          codes: Int): (DataFrame, DataFrame) = {
     graft.functions.GraftFunctions.register(spark)
     val qemb = gatedQemb(t(spark, sfDir, "embeddings"))
-    val cbs = pqFit(md5Sample(qemb), "qv", codes)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    (qemb, (0 until PqSubs).map(s => s -> codebook(cbs, s)))
+    (qemb, pqFit(md5Sample(qemb), "qv", codes).persist(StorageLevel.MEMORY_AND_DISK))
   }
+
+  /** Raw-vector PQ as the one-cell case of IVFPQ: every vector sits in
+    * cell 0, whose centroid is the zero vector, so its "residual" is the
+    * vector itself — the (vec_id, cell, rv) frame [[encodeAgainst]] reads.
+    */
+  private def oneCell(qemb: DataFrame): DataFrame =
+    qemb.select(col("vec_id"), lit(0).as("cell"), col("qv").as("rv"))
 
   /** PQ codebook build report under the EXACT hash gate: per (subspace,
     * code), the number of assigned corpus vectors and their total/mean
     * integer squared reconstruction error — the table that tells an
     * operator whether the codebook count is adequate (mean error per
     * subspace IS the quantization distortion that bounds ADC accuracy).
-    * Everything integer: fit, assignment, per-vector error (native sq_l2
-    * kernel), error sums as DECIMAL. Scale: fits are [[TrainCap]]-bounded;
-    * assignment is S map-only passes; the report is one hash-agg.
+    * Everything integer: fit, assignment, per-vector error, error sums as
+    * DECIMAL. Scale: fits are [[TrainCap]]-bounded; the corpus is encoded
+    * in ONE map pass ([[encodeAgainst]]), whose per-subspace argmin
+    * distances ARE the reconstruction errors; the report is one hash-agg
+    * over the S (subspace, code, err) entries of each vector.
     */
   def pqCodebook(spark: SparkSession, sfDir: String,
                  codes: Int = 8): DataFrame = {
     val (qemb, cbs) = pqCodebooks(spark, sfDir, codes)
-    val perSub = cbs.map { case (s, cb) =>
-      gatedWithBest(pqSliced(qemb, s), cb)
-        .join(cb, "centroid_id")
-        .select(lit(s.toLong).as("subspace"),
-                col("centroid_id").cast("long").as("code"),
-                call_function("sq_l2", col("qv"), col("centroid")).as("err"))
-    }
+    val errs = encodeAgainst(oneCell(qemb), cbs)
+      .select(inline(array((0 until PqSubs).map(s =>
+        struct(lit(s.toLong).as("subspace"), col(s"code_$s").cast("long").as("code"),
+               col(s"err_$s").as("err"))): _*)))
     ordered(
-      perSub.reduce(_ unionByName _)
-        .groupBy(col("subspace"), col("code"))
+      errs.groupBy(col("subspace"), col("code"))
         .agg(count(lit(1)).as("n_members"),
              sum(col("err").cast("decimal(38,0)")).as("sum_err"))
         .select(col("subspace"), col("code"), col("n_members"),
@@ -673,34 +626,27 @@ object Ivf {
   /** PQ asymmetric-distance (ADC) top-k under the EXACT hash gate — the
     * serving-path mechanism: the probe (vec 0) stays FULL precision, each
     * corpus vector is its S code ids, and the approximate distance is the
-    * sum of S table lookups d(probe_slice_s, centroid(code_s)) — S·codes
-    * integer L2 evaluations total for the TABLE (broadcast-sized at any
-    * corpus), then one map-side sum per vector. Ties to the lower vec_id.
-    * The honest approximation: ADC distances are quantized, so the top-k
-    * is the PQ answer, not the exact one — [[pqCodebook]]'s mean errors
-    * bound the gap, and production re-ranks a shortlist at full precision
-    * exactly like [[ivfTopKQuantized]].
+    * sum of S table lookups d(probe_slice_s, centroid(code_s)). It is the
+    * one-cell case of [[annIvfPq]] ([[oneCell]]): the corpus is encoded
+    * in one pass ([[encodeAgainst]]) and scored by the shared
+    * [[adcScore]] with the single probe cell (p_id 0, cell 0, the probe's
+    * full vector as its residual) — S·codes integer L2 evaluations for
+    * the tables (broadcast-sized at any corpus), then one map-side sum
+    * per vector. Ties to the lower vec_id. The honest approximation: ADC
+    * distances are quantized, so the top-k is the PQ answer, not the
+    * exact one — [[pqCodebook]]'s mean errors bound the gap, and
+    * production re-ranks a shortlist at full precision exactly like
+    * [[ivfTopKQuantized]].
     */
   def annPq(spark: SparkSession, sfDir: String, codes: Int = 8,
             k: Int = 10): DataFrame = {
     val (qemb, cbs) = pqCodebooks(spark, sfDir, codes)
-    val perSub = cbs.map { case (s, cb) =>
-      val probeSlice = pqSliced(qemb.filter(col("vec_id") === 0), s)
-        .select(col("qv").as("pq")).limit(1)
-      val dtable = broadcast(
-        cb.crossJoin(broadcast(probeSlice))
-          .select(col("centroid_id"),
-                  call_function("sq_l2", col("centroid"), col("pq")).as("d")))
-      gatedWithBest(pqSliced(qemb, s), cb)
-        .join(dtable, "centroid_id")
-        .select(col("vec_id"), col("d"))
-    }
-    perSub.reduce(_ unionByName _)
-      .filter(col("vec_id") =!= 0)
-      .groupBy(col("vec_id"))
-      .agg(sum(col("d")).as("adc_dist"))
+    val probe = oneCell(qemb.filter(col("vec_id") === 0)).limit(1)
+      .select(col("vec_id").as("p_id"), col("cell"), col("rv").as("prv"))
+    adcScore(encodeAgainst(oneCell(qemb), cbs), probe, cbs)
       .orderBy(col("adc_dist").asc, col("vec_id").asc)
       .limit(k)
+      .select(col("vec_id"), col("adc_dist"))
   }
 
   /** Full IVFPQ under the EXACT hash gate (Jégou et al. 2011, the
@@ -715,10 +661,13 @@ object Ivf {
     * own S × codes integer-L2 table — nprobe·S·codes evaluations total,
     * broadcast-sized at any corpus), and every vector IN a probed cell is
     * scored by S table lookups. Exact integers end to end; ties to the
-    * lower vec_id. Scale shape: fits are [[TrainCap]]-bounded, cell and
-    * code assignments are map-only broadcast argmins, candidate pruning is
-    * corpus ⋈ broadcast(nprobe rows), and the ADC sum is one map-side
-    * aggregation — the corpus never all-pairs and never broadcasts.
+    * lower vec_id. Scale shape: fits are [[TrainCap]]-bounded, the cell
+    * assignment is a map-only broadcast argmin, the codes come from ONE
+    * map pass ([[encodeAgainst]]), and the served path's scorer
+    * ([[adcScore]], here with the single probe p_id 0) prunes candidates
+    * by corpus ⋈ broadcast(nprobe rows) and sums the S lookups map-side
+    * per candidate — the corpus never all-pairs, never broadcasts and
+    * never shuffles ahead of the top-k.
     */
   def annIvfPq(spark: SparkSession, sfDir: String, nLists: Int = 16,
                nprobe: Int = 4, codes: Int = 8, k: Int = 10): DataFrame =
@@ -754,12 +703,13 @@ object Ivf {
     // EAGER lineage truncation on the fitted frames (the q_mmr_diversity /
     // q_hits exemption class, recorded in ScaleInfraSpec's laziness spec):
     // cents is <=nLists rows and the codebooks <=PqSubs·codes rows, but
-    // their fit chains are deep — and [[annIvfPq]] references them from
-    // ~10 legs (residuals, probe cells, 4 ADC tables, 4 assignments).
-    // Lazy persist marks leave every reference re-analyzing the full fit
-    // subtree: with both fits keyed, `q_ann_ivf_pq` took 20.6–27.4 s lazy
-    // vs 5.9–6.8 s checkpointed (fresh JVMs, sf0.1, 4 cores). The
-    // checkpointed frames are driver-trivial at any corpus scale.
+    // their fit chains are deep, and [[annIvfPq]] references them from ~8
+    // legs (the residual argmin and centroid join, the probe cells, the
+    // encode fold, 4 ADC tables). Lazy persist marks leave every reference
+    // re-analyzing the full fit subtree: `q_ann_ivf_pq` took 11.7–14.4 s
+    // lazy vs 5.5–6.0 s checkpointed, `q_ivfpq_recall` 16.9–17.9 s vs
+    // 5.5–6.1 s (fresh JVMs, sf0.1, 4 cores). The checkpointed frames are
+    // driver-trivial at any corpus scale.
     val cents = lloydFlat(csample, nLists, Iters, Drop).localCheckpoint(true)
     // residual frame: map-only argmin + one broadcast join against the
     // nLists-row centroid table
@@ -779,45 +729,21 @@ object Ivf {
 
   private def annIvfPqParts(spark: SparkSession, sfDir: String, nLists: Int,
                             nprobe: Int, codes: Int, k: Int): IvfPqParts = {
-    val IvfPqFit(qemb, cents, resid, cbAll, _) =
+    val IvfPqFit(qemb, cents, resid, codebooks, _) =
       ivfPqFit(spark, sfDir, nLists, codes)
-    val cbs = (0 until PqSubs).map(s => s -> codebook(cbAll, s))
     // probe machinery: nprobe nearest cells, then a residual PER CELL
     val probe = qemb.filter(col("vec_id") === 0)
-      .select(col("qv").as("pq")).limit(1)
+      .select(col("vec_id").as("p_id"), col("qv").as("pq")).limit(1)
     val probeCells = cents.crossJoin(broadcast(probe))
       .withColumn("d", call_function("sq_l2", col("centroid"), col("pq")))
       .orderBy(col("d").asc, col("centroid_id").asc)
       .limit(nprobe)
-      .select(col("centroid_id").as("cell"),
+      .select(col("p_id"), col("centroid_id").as("cell"),
               zip_with(col("pq"), col("centroid"), (a, b) => a - b).as("prv"))
-    // ADC tables: per (cell, subspace, code) the integer L2 between the
-    // probe's cell-residual sub-vector and the codebook centroid
-    val dtables = cbs.map { case (s, cb) =>
-      broadcast(
-        probeCells.crossJoin(broadcast(cb))
-          .select(col("cell"), col("centroid_id"),
-                  call_function("sq_l2",
-                    slice(col("prv"), s * PqSubDim + 1, PqSubDim),
-                    col("centroid")).as("d")))
-    }
-    // candidate vectors = members of probed cells; ADC = Σ_s dtable lookups
-    val perSub = cbs.zip(dtables).map { case ((s, cb), dt) =>
-      gatedWithBest(rvSlice(resid, s), cb)
-        .join(dt, Seq("cell", "centroid_id")) // broadcast: prunes + looks up
-        .select(col("vec_id"), col("d"))
-    }
-    val topk = perSub.reduce(_ unionByName _)
-      .filter(col("vec_id") =!= 0)
-      .groupBy(col("vec_id"))
-      .agg(sum(col("d")).as("adc_dist"),
-           count(lit(1)).as("_subs"))
-      // a candidate must have been scored in ALL subspaces (it always is —
-      // membership is per-vector, not per-subspace; the guard states it)
-      .filter(col("_subs") === PqSubs)
-      .drop("_subs")
+    val topk = adcScore(encodeAgainst(resid, codebooks), probeCells, codebooks)
       .orderBy(col("adc_dist").asc, col("vec_id").asc)
       .limit(k)
+      .select(col("vec_id"), col("adc_dist"))
     IvfPqParts(cents, resid, probeCells, topk)
   }
 
@@ -900,13 +826,6 @@ object Ivf {
                         codes: Int): String =
     storeRoot(spark, sfDir, Seq("embeddings"), "ivfpq-v1", s"-n$nLists-c$codes")
 
-  /** 1-based 16-dim residual slice for subspace `s` over a (vec_id, cell,
-    * rv) frame — the shared slicer of the build and serve paths.
-    */
-  private def rvSlice(df: DataFrame, s: Int): DataFrame =
-    df.select(col("vec_id"), col("cell"),
-              slice(col("rv"), s * PqSubDim + 1, PqSubDim).as("qv"))
-
   /** Build and PERSIST the IVFPQ index (idempotent — returns immediately
     * when a committed index already exists): exactly [[annIvfPq]]'s fit
     * ([[ivfPqFit]]), then three SnapshotStore tables under the index
@@ -915,10 +834,9 @@ object Ivf {
     *  - `codebooks`: (subspace, code, centroid) — 4·codes rows;
     *  - `codes`:     (vec_id, cell, code_0..code_3) — ONE row per corpus
     *    vector, the 8-bytes-per-vector layout PQ exists for.
-    * The per-vector codes come out of ONE map pass: all four codebooks
-    * fold into a single broadcast row and each subspace's argmin runs
-    * inline per row — no corpus-with-corpus join, no shuffle; the build's
-    * only corpus cost is the residual pass + this code pass + the write.
+    * The per-vector codes come out of ONE map pass ([[encodeAgainst]]) —
+    * no corpus-with-corpus join, no shuffle; the build's only corpus cost
+    * is the residual pass + this code pass + the write.
     * Deterministic end to end (integer arithmetic, md5 sample order), so
     * concurrent builders racing on the same root commit identical content
     * and any committed version serves correctly.
@@ -932,37 +850,40 @@ object Ivf {
     val fit = ivfPqFit(spark, sfDir, nLists, codes)
     SnapshotStore.commitSnapshot(fit.cents, s"$root/centroids")
     SnapshotStore.commitSnapshot(fit.codebooks, s"$root/codebooks")
-    SnapshotStore.commitSnapshot(encodeAgainst(fit.resid, fit.codebooks),
-                                 s"$root/codes")
+    SnapshotStore.commitSnapshot(
+      encodeAgainst(fit.resid, fit.codebooks).drop(PqErrs: _*), s"$root/codes")
     (fit.resid +: fit.samples).foreach(_.unpersist())
     root
   }
 
-  /** PQ-encode a residual frame (vec_id, cell, rv) against an EXISTING
-    * codebook table (subspace, code, centroid) — all 4 codebooks fold into
-    * ONE broadcast row and every subspace's argmin runs inline per row:
-    * one map pass, no shuffle, no fit. Shared by the index build and the
-    * incremental/streaming ingest paths.
+  /** PQ encode — the only PQ code assignment: each row of a (vec_id,
+    * cell, rv) frame gets its [[PqSubs]] codes in ONE map pass against ONE
+    * broadcast row (the codebooks (subspace, code, centroid) folded by
+    * subspace, [[foldByGroup]]): code_s is [[nearest]] over subspace s's
+    * codebook for rv's s-th [[PqSubDim]]-wide slice, and err_s its argmin
+    * distance — the slice's integer squared reconstruction error, with no
+    * join back to the codebook. No shuffle, no fit. Returns (vec_id, cell,
+    * code_0..code_3, err_0..err_3); the persisted codes layout drops
+    * [[PqErrs]]. Shared by the index build, the incremental/streaming
+    * ingest, [[pqCodebook]] and the build-inside-query ADC paths.
     */
-  private def encodeAgainst(resid: DataFrame, codebooks: DataFrame): DataFrame = {
-    val folded = (0 until PqSubs).map { s =>
-      codebooks.filter(col("subspace") === s)
-        .agg(array_sort(collect_list(
-          struct(col("code").as("centroid_id"), col("centroid")))).as(s"_cb$s"))
-    }.reduce(_ crossJoin _)
-    def codeCol(s: Int): Column = {
-      val dists = transform(col(s"_cb$s"),
-        c => call_function("sq_l2",
-               slice(col("rv"), s * PqSubDim + 1, PqSubDim),
-               c.getField("centroid")))
-      element_at(col(s"_cb$s"),
-        array_position(dists, array_min(dists)).cast("int"))
-        .getField("centroid_id").as(s"code_$s")
-    }
-    resid.crossJoin(broadcast(folded))
+  private def encodeAgainst(df: DataFrame, codebooks: DataFrame): DataFrame = {
+    val folded = foldByGroup(codebooks.select(col("subspace").as("grp"),
+      col("code").as("centroid_id"), col("centroid")))
+    val subs = 0 until PqSubs
+    // one struct-min per subspace, its (d, id) read by two columns
+    // (CollapseProject does not copy a non-cheap expression into two uses)
+    df.crossJoin(broadcast(folded))
+      .select(col("vec_id") +: col("cell") +: subs.map(s => nearest(
+          slice(col("rv"), s * PqSubDim + 1, PqSubDim),
+          element_at(col("_fm"), lit(s.toLong))).as(s"_e$s")): _*)
       .select(col("vec_id") +: col("cell") +:
-              (0 until PqSubs).map(codeCol): _*)
+              (subs.map(s => col(s"_e$s.id").as(s"code_$s")) ++
+               subs.map(s => col(s"_e$s.d").as(s"err_$s"))): _*)
   }
+
+  /** [[encodeAgainst]]'s reconstruction-error columns. */
+  private val PqErrs = (0 until PqSubs).map(s => s"err_$s")
 
   /** Encode NEW vectors against an EXISTING persisted index (centroids +
     * codebooks frames as [[buildIvfPqIndex]] committed them): cell
@@ -980,7 +901,7 @@ object Ivf {
       .join(broadcast(cents), "centroid_id")
       .select(col("vec_id"), col("centroid_id").as("cell"),
               zip_with(col("qv"), col("centroid"), (a, b) => a - b).as("rv"))
-    encodeAgainst(resid, codebooks)
+    encodeAgainst(resid, codebooks).drop(PqErrs: _*)
   }
 
   /** Serve a probe BATCH from the PREBUILT IVFPQ index — the query half of
@@ -988,13 +909,14 @@ object Ivf {
     * the probes' own full-precision vectors), contains NO k-means fit (no
     * iteration subtree, no ntile init, no posexplode means — PlanSpec
     * asserts it), and scores candidates through per-(probe, cell) ADC
-    * tables exactly like [[annIvfPq]]'s tail. Batch shape: probes are
-    * vec_id < `nProbes` (the matryoshkaRecall %N-anchor discipline); per
-    * probe the nprobe nearest cells, per (probe, cell, subspace) a
-    * codes-row ADC table (nProbes·nprobe·4·codes rows TOTAL — broadcast
-    * at any corpus), then FOUR map-side broadcast lookups against the
-    * corpus codes table (no corpus shuffle before the per-probe top-k,
-    * which is two-phase [[graft.util.TopK]]). Self-matches excluded.
+    * tables through the same scorer as [[annIvfPq]] ([[adcScore]]). Batch
+    * shape: probes are vec_id < `nProbes` (the matryoshkaRecall %N-anchor
+    * discipline); per probe the nprobe nearest cells, per (probe, cell,
+    * subspace) a codes-row ADC table (nProbes·nprobe·4·codes rows TOTAL —
+    * broadcast at any corpus), then FOUR map-side broadcast lookups
+    * against the corpus codes table (no corpus shuffle before the
+    * per-probe top-k, which is two-phase [[graft.util.TopK]]).
+    * Self-matches excluded.
     * Output: (p_id, vec_id, adc_dist) — k rows per probe.
     *
     * Serving cost at 100 TB: the corpus-side work is ONE broadcast-pruned
@@ -1036,34 +958,47 @@ object Ivf {
     val pcTop = graft.util.TopK.perGroup(pc, Seq(col("p_id")),
         Seq(col("d").asc, col("cell").asc), nprobe)
       .select(col("p_id"), col("cell"), col("prv"))
-    // per-(probe, cell, subspace) ADC tables — broadcast-sized always; the
-    // limit(codes) states the codebook's bound IN THE PLAN (a PQ codebook
-    // has exactly `codes` rows per subspace, but the hint guard can only
-    // see plan-level bounds — the matryoshkaRecall probe-batch discipline)
-    val dts = (0 until PqSubs).map { s =>
-      broadcast(
-        pcTop.crossJoin(broadcast(
-            cb.filter(col("subspace") === s).limit(codes)))
-          .select(col("p_id"), col("cell"), col("code").as(s"code_$s"),
-                  call_function("sq_l2",
-                    slice(col("prv"), s * PqSubDim + 1, PqSubDim),
-                    col("centroid")).as(s"d_$s")))
-    }
-    // candidates = codes-table members of probed cells; ADC = 4 broadcast
-    // lookups summed map-side — the corpus never shuffles before the top-k
-    val cand = codesT
-      .join(broadcast(pcTop.select(col("p_id"), col("cell"))), "cell")
-    val scored = dts.zipWithIndex.foldLeft(cand) { case (df, (dt, s)) =>
-      df.join(dt, Seq("p_id", "cell", s"code_$s"))
-    }
-      .filter(col("vec_id") =!= col("p_id"))
-      .select(col("p_id"), col("vec_id"),
-              (col("d_0") + col("d_1") + col("d_2") + col("d_3")).as("adc_dist"))
+    // the limit states the codebooks' PqSubs·codes bound IN THE PLAN (a PQ
+    // codebook has at most `codes` rows per subspace, but the broadcast-hint
+    // guard can only see plan-level bounds — the matryoshkaRecall
+    // probe-batch discipline); one limit, shared by the four ADC tables
+    val scored = adcScore(codesT, pcTop, cb.limit(PqSubs * codes))
     ordered(
       graft.util.TopK.perGroup(scored, Seq(col("p_id")),
           Seq(col("adc_dist").asc, col("vec_id").asc), k)
         .select(col("p_id"), col("vec_id"), col("adc_dist")),
       "p_id", "adc_dist", "vec_id")
+  }
+
+  /** Asymmetric-distance (ADC) scoring — the one PQ scorer of [[annPq]],
+    * [[annIvfPq]] and [[annIvfPqServed]]. `probeCells` (p_id, cell, prv)
+    * holds each probe's probed cells with the probe's residual against the
+    * cell's centroid; `codesT` (vec_id, cell, code_0..code_3) the encoded
+    * corpus; `codebooks` (subspace, code, centroid). Per (probe, cell,
+    * subspace) a codes-row ADC table, broadcast-sized at any corpus.
+    * Candidates are the codes rows of a probed cell; their ADC is FOUR
+    * broadcast lookups summed map-side per candidate row, so the corpus
+    * never shuffles ahead of the caller's top-k. Self-matches excluded.
+    * Returns (p_id, vec_id, adc_dist).
+    */
+  private def adcScore(codesT: DataFrame, probeCells: DataFrame,
+                       codebooks: DataFrame): DataFrame = {
+    val dts = (0 until PqSubs).map { s =>
+      broadcast(
+        probeCells.crossJoin(broadcast(codebooks.filter(col("subspace") === s)))
+          .select(col("p_id"), col("cell"), col("code").as(s"code_$s"),
+                  call_function("sq_l2",
+                    slice(col("prv"), s * PqSubDim + 1, PqSubDim),
+                    col("centroid")).as(s"d_$s")))
+    }
+    val cand = codesT
+      .join(broadcast(probeCells.select(col("p_id"), col("cell"))), "cell")
+    dts.zipWithIndex.foldLeft(cand) { case (df, (dt, s)) =>
+      df.join(dt, Seq("p_id", "cell", s"code_$s"))
+    }
+      .filter(col("vec_id") =!= col("p_id"))
+      .select(col("p_id"), col("vec_id"),
+              (0 until PqSubs).map(s => col(s"d_$s")).reduce(_ + _).as("adc_dist"))
   }
 
   /** FILTERED vector search over the served index — top-k restricted to a
@@ -1589,9 +1524,9 @@ object Ivf {
     * centroid tagged with its coarse group by the same map-only integer
     * argmin as every other gated assignment (ties to the lowest gid).
     * Returns (coarse (centroid_id, centroid) restricted to NON-EMPTY
-    * groups, fineTagged (cid, fcent, gid)) — restricting to live groups
-    * keeps the corpus-side coarse argmin from ever routing a vector into
-    * a group with no fine members.
+    * groups, the fine cells tagged (grp, centroid_id, centroid)) —
+    * restricting to live groups keeps the corpus-side coarse argmin from
+    * ever routing a vector into a group with no fine members.
     */
   private def gatedCoarseOverFine(fine: DataFrame, nCoarse: Int)
       : (DataFrame, DataFrame) = {
@@ -1599,12 +1534,44 @@ object Ivf {
                                  col("centroid").as("qv"))
     val coarse = lloydFlat(finePoints, nCoarse, CoarseIters, Carry)
     val fineTagged = gatedWithBest(finePoints, coarse)
-      .select(col("vec_id").cast("int").as("cid"), col("qv").as("fcent"),
-              col("centroid_id").as("gid"))
-    val liveCoarse = coarse.join(
-      fineTagged.select(col("gid").as("centroid_id")).distinct(),
-      Seq("centroid_id"), "left_semi")
-    (liveCoarse, fineTagged)
+      .select(col("centroid_id").as("grp"), col("vec_id").cast("int").as("centroid_id"),
+              col("qv").as("centroid"))
+    (liveGroups(coarse, fineTagged), fineTagged)
+  }
+
+  /** The `coarse` cells that own at least one cell of `fine`
+    * (grp, centroid_id, centroid).
+    */
+  private def liveGroups(coarse: DataFrame, fine: DataFrame): DataFrame =
+    coarse.join(fine.select(col("grp").as("centroid_id")).distinct(),
+                Seq("centroid_id"), "left_semi")
+
+  /** Two-level map-only routing, shared by the gated and the cosine
+    * hierarchies: each row of `df` picks its `best` cell (the id of
+    * [[nearest]] or [[mostSimilar]] over a cells array) among the `coarse`
+    * (centroid_id, centroid) cells, then among only the chosen group's
+    * cells of `fine` (grp, centroid_id, centroid). Both levels fold into
+    * ONE broadcast row (the coarse array and [[foldByGroup]]'s grp → cells
+    * map), so the corpus never shuffles. Adds `gid` (the coarse cell) and
+    * `fcid` (the fine cell inside it).
+    *
+    * The fine level is a MAP lookup, not a flat array filtered per row: a
+    * `filter(_f, gid == _gid)` lambda gets the coarse argmin's whole
+    * kernel-call tree inlined INTO its body by CollapseProject (single-use
+    * aliases collapse, and HOF bodies get no common-subexpression
+    * elimination), re-evaluating it per ARRAY ELEMENT — measured 499 s vs
+    * 169 s at the 100× decade. `element_at(_fm, gid)` keeps the coarse
+    * argmin in the transform's array argument, evaluated once per row.
+    */
+  private def hierRoute(df: DataFrame, coarse: DataFrame, fine: DataFrame)
+                       (best: Column => Column): DataFrame = {
+    val folded = coarse
+      .agg(collect_list(struct(col("centroid_id"), col("centroid"))).as("_g"))
+      .crossJoin(foldByGroup(fine))
+    df.crossJoin(broadcast(folded))
+      .withColumn("gid", best(col("_g")))
+      .withColumn("fcid", best(element_at(col("_fm"), col("gid"))))
+      .drop("_g", "_fm")
   }
 
   /** Hierarchical (coarse→fine) map-only cell assignment — the 100 TB
@@ -1613,10 +1580,9 @@ object Ivf {
     * then over only the fine centroids OF that group — corpus ×
     * (nCoarse + nLists/nCoarse) kernel calls, minimized at
     * nCoarse = √nLists (2·√nLists, a 22× reduction at nLists = 2048).
-    * Still strictly map-only: BOTH levels fold into one broadcast row
-    * (coarse array + gid-tagged fine array, each id-sorted so first-
-    * position argmin ties resolve to the lowest id, exactly the oracle's
-    * `row_number() OVER (ORDER BY d, id)`), and the corpus never
+    * Still strictly map-only ([[hierRoute]]): BOTH levels fold into one
+    * broadcast row, each argmin ties to the lowest id (exactly the
+    * oracle's `row_number() OVER (ORDER BY d, id)`), and the corpus never
     * shuffles. The price is the standard routing approximation: a vector
     * whose true nearest fine centroid lives in a runner-up coarse group
     * is assigned to its routed group's best — the same recall tradeoff
@@ -1628,45 +1594,9 @@ object Ivf {
                               nCoarse: Int): DataFrame = {
     graft.functions.GraftFunctions.register(df.sparkSession)
     val (coarse, fineTagged) = gatedCoarseOverFine(fine, nCoarse)
-    // the fine level folds as a MAP gid → id-sorted (cid, fcent) array,
-    // NOT a flat array filtered per row: a `filter(_f, gid == _gid)`
-    // lambda gets `_gid`'s whole 45-kernel-call tree inlined INTO the
-    // lambda body by CollapseProject (single-use aliases collapse, and
-    // HOF bodies get no common-subexpression elimination), re-evaluating
-    // it per ARRAY ELEMENT — measured 499 s vs flat's 169 s at the 100×
-    // decade. element_at(map, _gid) keeps every expensive tree at
-    // once-per-row evaluation.
-    val fmap = fineTagged.groupBy(col("gid"))
-      .agg(array_sort(collect_list(struct(col("cid"), col("fcent")))).as("arr"))
-      .agg(map_from_entries(collect_list(struct(col("gid"), col("arr"))))
-        .as("_fm"))
-    val folded = coarse
-      .agg(array_sort(collect_list(struct(col("centroid_id"), col("centroid"))))
-        .as("_g"))
-      .crossJoin(fmap)
-    val gd = transform(col("_g"),
-      c => call_function("sq_l2", col("qv"), c.getField("centroid")))
-    // fine stage: ONE pass — transform the looked-up candidate array to
-    // (d, cid) structs and take the lexicographic array_min (min distance,
-    // ties to the LOWEST cid — exactly the oracle's ORDER BY d, cid).
-    // The two-column (_cands, _fd) formulation referenced the looked-up
-    // array twice, copying each candidate's 64-long vector per reference
-    // (~46 KB/row at nLists=2048 — measured as the whole hier overhead at
-    // the 100× decade); the struct-min materializes only (long, int)
-    // pairs.
-    df.crossJoin(broadcast(folded))
-      .withColumn("_gd", gd)
-      .withColumn("_gid",
-        element_at(col("_g"),
-          array_position(col("_gd"), array_min(col("_gd"))).cast("int"))
-          .getField("centroid_id"))
-      .withColumn("centroid_id",
-        array_min(transform(element_at(col("_fm"), col("_gid")),
-          f => struct(call_function("sq_l2", col("qv"), f.getField("fcent"))
-                        .as("d"),
-                      f.getField("cid").as("cid"))))
-          .getField("cid"))
-      .drop("_g", "_fm", "_gd", "_gid")
+    hierRoute(df, coarse, fineTagged)(nearest(col("qv"), _).getField("id"))
+      .withColumn("centroid_id", col("fcid"))
+      .drop("gid", "fcid")
   }
 
   /** IVF index-health report under the EXACT hash gate (round 11 —
@@ -1766,21 +1696,8 @@ object Ivf {
 
     // corpus routing over LIVE coarse groups only (a group whose sample
     // slice was empty has no fine cells and must not attract vectors)
-    val live = coarse.join(fine.select(col("grp").as("centroid_id")).distinct(),
-                           Seq("centroid_id"), "left_semi")
-    val folded = live
-      .agg(array_sort(collect_list(struct(col("centroid_id"), col("centroid"))))
-        .as("_g"))
-      .crossJoin(foldByGroup(fine))
-    val gd = transform(col("_g"),
-      c => gatedL2(col("qv"), c.getField("centroid")))
-    val asg = qemb.crossJoin(broadcast(folded))
-      .withColumn("_gd", gd)
-      .withColumn("gid",
-        element_at(col("_g"),
-          array_position(col("_gd"), array_min(col("_gd"))).cast("int"))
-          .getField("centroid_id"))
-      .withColumn("fcid", nearest(element_at(col("_fm"), col("gid"))))
+    val asg = hierRoute(qemb, liveGroups(coarse, fine), fine)(
+        nearest(col("qv"), _).getField("id"))
       .select(col("vec_id"), col("qv"),
               (col("gid").cast("long") * kPerGroup + col("fcid")).as("cid"))
       .persist(StorageLevel.MEMORY_AND_DISK)

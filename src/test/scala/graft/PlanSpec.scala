@@ -185,6 +185,20 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("TakeOrderedAndProject"), "ADC top-k must TakeOrdered")
   }
 
+  test("PQ queries encode each vector once and sum its ADC map-side: no " +
+       "Union and no vec_id-keyed Exchange ahead of the top-k") {
+    // one encode pass scores all subspaces per row, so there is neither a
+    // per-subspace union nor a regroup of the scored rows by vec_id
+    Seq("q_ann_pq", "q_ann_ivf_pq").foreach { qn =>
+      val p = plan(SparkEntry.queries(qn)(spark, Sf))
+      assert(!p.contains("Union"), s"$qn plan has a Union:\n${p.take(3000)}")
+      assert("hashpartitioning\\(vec_id#".r.findFirstIn(p).isEmpty,
+        s"$qn shuffles on vec_id:\n" +
+          p.linesIterator.filter(_.contains("hashpartitioning")).mkString("\n"))
+      assert(p.contains("TakeOrderedAndProject"), s"$qn top-k must TakeOrdered")
+    }
+  }
+
   test("round-11: rrfFusion's dense leg broadcasts the 1-row probe and the " +
        "final fuse joins two rank-bounded legs") {
     val p = plan(SparkEntry.queries("q_rrf_fusion")(spark, Sf))

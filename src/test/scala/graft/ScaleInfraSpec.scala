@@ -387,14 +387,14 @@ class ScaleInfraSpec extends SparkSpec {
                         // rakingIpf plan-nesting lesson); the checkpointed
                         // frame is k rows, driver-trivial at any scale
                         "q_mmr_diversity",
-                        // IVFPQ: the coarse fit and the tagged union of the
-                        // 4 PQ codebooks are one-shot leaf checkpoints of
-                        // <=16/<=32-row frames referenced from ~10 legs
-                        // (residuals, probe cells, ADC tables, code
-                        // assignments); lazy marks re-analyzed the fit
-                        // subtrees per reference — 22.3 s at sf0.1 (11.7 s
-                        // pure Catalyst analysis) vs ~7 s with the fitted
-                        // frames checkpointed to leaves (Ivf.annIvfPq note)
+                        // IVFPQ: the coarse fit and the subspace-keyed PQ
+                        // codebook fit are one-shot leaf checkpoints of
+                        // <=16/<=32-row frames referenced from ~8 legs
+                        // (residual argmin and centroid join, probe cells,
+                        // the one-pass encode, 4 ADC tables); lazy marks
+                        // re-analyze the fit subtrees per reference —
+                        // 11.7-14.4 s at sf0.1 vs 5.5-6.0 s with the fitted
+                        // frames checkpointed to leaves (Ivf.ivfPqFit note)
                         "q_ann_ivf_pq",
                         // builds the full IVFPQ index twice (index + truth
                         // comparison) — inherits annIvfPq's checkpoints
