@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Optimization-round tooling: run queries once and report DETERMINISTIC
@@ -10,6 +12,14 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   * (wall clock on this box swings ±2× with host contention).
   *
   * Usage: runMain graft.StageCount <q_a,q_b,...>
+  *
+  * Each counted pass also prints one `[codegen]` line: the classes Janino
+  * compiled during the pass and their compile time (a steady-state pass of
+  * a query whose classes are cached compiles none). With `SC_TRACE_JOBS=1`
+  * every job prints its call site and the operator scopes of its stages
+  * (`Exchange`, `BroadcastExchange`, `WriteFiles`, …): Spark submits AQE
+  * query-stage and broadcast jobs from a thread pool, so their call site
+  * names no query code and the scopes are what tell them apart.
   */
 object StageCount {
   def main(args: Array[String]): Unit = {
@@ -38,7 +48,10 @@ object StageCount {
           // ("count at X.scala:N"); `callSite.short` is only a job
           // property when someone called setCallSite
           val cs = j.stageInfos.headOption.map(_.name).getOrElse("")
-          System.err.println(s"[job] ${j.jobId} stages=${j.stageInfos.size} cs=$cs desc=${d.take(80)}")
+          // codegen stages carry their id ("WholeStageCodegen (3)")
+          val ops = j.stageInfos.flatMap(_.rddInfos).flatMap(_.scope)
+            .map(_.name.replaceAll(" \\(\\d+\\)$", "")).distinct
+          System.err.println(s"[job] ${j.jobId} stages=${j.stageInfos.size} cs=$cs ops=${ops.mkString(",")} desc=${d.take(80)}")
         }
       }
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
@@ -58,12 +71,15 @@ object StageCount {
       Thread.sleep(300)
       jobs.set(0); stages.set(0); tasks.set(0)
       shufR.set(0); shufW.set(0); input.set(0)
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val compileNs0 = CodeGenerator.compileTime
       val t0 = System.nanoTime()
       val rc = try { SparkEntry.queries(n)(spark, sfDir).count() }
                catch { case e: Throwable => System.err.println(s"$n FAILED: $e"); -1L }
       val wall = (System.nanoTime() - t0) / 1e9
       Thread.sleep(300) // let listener drain
       println(f"[stagecount] $n%-28s jobs=${jobs.get}%4d stages=${stages.get}%4d tasks=${tasks.get}%6d shufR=${shufR.get / 1024}%8dKB shufW=${shufW.get / 1024}%8dKB input=${input.get / 1024}%8dKB rows=$rc%8d wall=$wall%7.2f")
+      println(f"[codegen] $n%-28s compiles=${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0}%4d compile_s=${(CodeGenerator.compileTime - compileNs0) / 1e9}%6.2f")
       spark.catalog.clearCache(); System.gc()
     }
     spark.stop()

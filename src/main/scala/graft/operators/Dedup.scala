@@ -206,9 +206,13 @@ object Dedup {
       .select(col("node"), least(col("node"), col("m")).as("label"))
       .localCheckpoint(true)
     // labels only decrease, so changed ⇔ any label < its round-start value;
-    // the probe is a filter over the already-checkpointed frame, no join
+    // the probe is a filter over the already-checkpointed frame, no join.
+    // `isEmpty` plans a CollectLimit over the filter; a `limit(1)` inside
+    // the plan would codegen a LocalLimit, whose counter Spark names from
+    // a JVM-wide sequence, so every round would compile classes no cache
+    // can reuse.
     def unchanged(jumped: DataFrame): Boolean =
-      jumped.filter(col("label") =!= col("old")).limit(1).count() == 0
+      jumped.filter(col("label") =!= col("old")).isEmpty
     val jumped = Iterate(labels0, maxIter)(Seq(_), (_, j) => unchanged(j)) { (r, _) =>
       val labels = r.select(col("node"), col("label"))
       // (1) neighbor-min propagation, carrying the round-start label as

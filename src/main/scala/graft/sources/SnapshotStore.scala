@@ -1,7 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Immutable-snapshot storage layer — the engine's replacement for the
   * reference's in-place table mutation (SURVEY §1.4: every UPDATE/MERGE
@@ -246,7 +247,8 @@ object SnapshotStore {
   /** Publish a staged directory as the next version. The commit point is
     * the atomic create-if-absent of `_commits/v{N}.json`; on collision the
     * writer retries at N+1 (its staged data is version-agnostic). Returns
-    * the committed version number.
+    * the committed version number. A `schema`, when given, is recorded in
+    * the manifest and [[readCommitted]] reads the version under it.
     *
     * Failure discipline (round-11 advice items): the staged directory must
     * still EXIST at publish time (a retention-expired vacuum or manual
@@ -259,8 +261,9 @@ object SnapshotStore {
     * surface as themselves instead of burning 50 version slots.
     */
   def publishSnapshot(spark: SparkSession, baseDir: String, dataDir: String,
-                      maxRetries: Int = 50): Long =
-    publishFencedInternal(spark, baseDir, dataDir, None, maxRetries)
+                      maxRetries: Int = 50,
+                      schema: Option[StructType] = None): Long =
+    publishFencedInternal(spark, baseDir, dataDir, None, maxRetries, schema)
 
   /** A concurrent-writer key-range conflict — the MERGE-semantics fence:
     * the losing writer's staged data was derived from a snapshot that no
@@ -287,14 +290,16 @@ object SnapshotStore {
   def publishSnapshotFenced(spark: SparkSession, baseDir: String,
                             dataDir: String, keyCol: String, keyMin: Long,
                             keyMax: Long, baseVersion: Long,
-                            maxRetries: Int = 50): Long =
+                            maxRetries: Int = 50,
+                            schema: Option[StructType] = None): Long =
     publishFencedInternal(spark, baseDir, dataDir,
-      Some((keyCol, keyMin, keyMax, baseVersion)), maxRetries)
+      Some((keyCol, keyMin, keyMax, baseVersion)), maxRetries, schema)
 
   private def publishFencedInternal(spark: SparkSession, baseDir: String,
                                     dataDir: String,
                                     fence: Option[(String, Long, Long, Long)],
-                                    maxRetries: Int): Long = {
+                                    maxRetries: Int,
+                                    schema: Option[StructType]): Long = {
     val (fs, _) = fsFor(spark, baseDir)
     // a manifest must never point at a directory that is already gone
     // (e.g. vacuumed while this writer stalled past the retention window)
@@ -327,7 +332,7 @@ object SnapshotStore {
         }
       }
       val v = committed.lastOption.getOrElse(-1L) + 1
-      if (tryCreateManifest(fs, baseDir, v, relData, fenceJson)) return v
+      if (tryCreateManifest(fs, baseDir, v, relData, schema, fenceJson)) return v
       attempts += 1 // collision: someone committed v first — re-fence, retry
     }
     sys.error(s"publishSnapshot: gave up after $maxRetries contended commits")
@@ -344,20 +349,16 @@ object SnapshotStore {
   private def manifestKeyRange(spark: SparkSession, baseDir: String,
                                v: Long): Option[(String, Long, Long)] = {
     val (fs, _) = fsFor(spark, baseDir)
-    val manifest = new org.apache.hadoop.fs.Path(f"$baseDir/_commits/v$v%05d.json")
-    if (!fs.exists(manifest)) return None
-    val in = fs.open(manifest)
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-               finally in.close()
-    if (!body.contains("\"version\""))
-      throw new SnapshotConflictException(
+    if (!fs.exists(manifestPath(baseDir, v))) return None
+    val m = manifestJson(spark, baseDir, v).filter(_.has("version"))
+      .getOrElse(throw new SnapshotConflictException(
         s"publishSnapshotFenced: manifest v$v is empty or unparsable " +
-        s"($body) — cannot verify key-range disjointness; re-derive and " +
-        "retry after the competing writer resolves")
+        "— cannot verify key-range disjointness; re-derive and retry " +
+        "after the competing writer resolves"))
     for {
-      c <- """"keyCol":\s*"([^"]+)"""".r.findFirstMatchIn(body).map(_.group(1))
-      lo <- """"keyMin":\s*(-?\d+)""".r.findFirstMatchIn(body).map(_.group(1).toLong)
-      hi <- """"keyMax":\s*(-?\d+)""".r.findFirstMatchIn(body).map(_.group(1).toLong)
+      c <- Option(m.get("keyCol")).map(_.asText)
+      lo <- Option(m.get("keyMin")).map(_.asLong)
+      hi <- Option(m.get("keyMax")).map(_.asLong)
     } yield (c, lo, hi)
   }
 
@@ -372,7 +373,7 @@ object SnapshotStore {
     val spark = df.sparkSession
     val baseV = committedVersions(spark, baseDir).lastOption.getOrElse(-1L)
     val staged = stageSnapshot(df, baseDir)
-    val r = spark.read.parquet(staged)
+    val r = spark.read.schema(readSchema(df)).parquet(staged)
       .agg(min(col(keyCol)).cast("long"), max(col(keyCol)).cast("long"))
       .head()
     // an empty staged frame (or an all-NULL key column) has no key band to
@@ -383,39 +384,67 @@ object SnapshotStore {
       s"'$keyCol' is all NULL — nothing to fence; use commitSnapshot for " +
       "empty/unkeyed writes")
     publishSnapshotFenced(spark, baseDir, staged, keyCol,
-                          r.getLong(0), r.getLong(1), baseV)
+                          r.getLong(0), r.getLong(1), baseV,
+                          schema = Some(readSchema(df)))
   }
 
   /** Stage + publish in one call — the writer API. Concurrent callers
     * serialize into distinct consecutive versions; a reader at any moment
-    * sees the highest PUBLISHED version, complete.
+    * sees the highest PUBLISHED version, complete. The manifest records
+    * the frame's schema, so reads of the version infer nothing.
     */
   def commitSnapshot(df: DataFrame, baseDir: String): Long =
-    publishSnapshot(df.sparkSession, baseDir,
-                    stageSnapshot(df, baseDir))
+    publishSnapshot(df.sparkSession, baseDir, stageSnapshot(df, baseDir),
+                    schema = Some(readSchema(df)))
 
-  private def manifestData(spark: SparkSession, baseDir: String,
-                           v: Long): String = {
+  /** The schema a parquet read of `df`'s written files resolves to: every
+    * field nullable, as Spark reads any file source.
+    */
+  private def readSchema(df: DataFrame): StructType =
+    GraftSqlBridge.asNullable(df.schema)
+
+  private def manifestPath(baseDir: String, v: Long) =
+    new org.apache.hadoop.fs.Path(f"$baseDir/_commits/v$v%05d.json")
+
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** Version `v`'s manifest as a JSON object; None when its body does not
+    * parse as one (a torn or foreign manifest).
+    */
+  private def manifestJson(spark: SparkSession, baseDir: String, v: Long)
+      : Option[com.fasterxml.jackson.databind.JsonNode] = {
     val (fs, _) = fsFor(spark, baseDir)
-    val manifest = new org.apache.hadoop.fs.Path(f"$baseDir/_commits/v$v%05d.json")
-    val in = fs.open(manifest)
+    val in = fs.open(manifestPath(baseDir, v))
     val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
                finally in.close()
-    // single-purpose field extraction — the manifest is engine-authored,
-    // two fixed fields, no nested JSON
-    val m = """"data":\s*"([^"]+)"""".r.findFirstMatchIn(body)
-      .getOrElse(sys.error(s"malformed manifest $manifest: $body"))
-    s"$baseDir/${m.group(1)}"
+    try Option(json.readTree(body)).filter(_.isObject)
+    catch { case _: com.fasterxml.jackson.core.JsonProcessingException => None }
+  }
+
+  /** Version `v`'s data directory and, when its writer recorded one, the
+    * schema to read it under. Manifests written before schemas were
+    * recorded, and partitioned roots (whose partition column types come
+    * from discovery), carry none.
+    */
+  private def manifestData(spark: SparkSession, baseDir: String,
+                           v: Long): (String, Option[StructType]) = {
+    val m = manifestJson(spark, baseDir, v).filter(_.has("data"))
+      .getOrElse(sys.error(s"malformed manifest ${manifestPath(baseDir, v)}"))
+    val schema = Option(m.get("schema"))
+      .map(s => DataType.fromJson(s.toString).asInstanceOf[StructType])
+    (s"$baseDir/${m.get("data").asText}", schema)
   }
 
   /** Read the latest committed version (or a pinned one via `asOf`) —
-    * manifest-resolved, so in-flight writers are invisible.
+    * manifest-resolved, so in-flight writers are invisible. A version
+    * with a recorded schema is read under it: no inference job.
     */
   def readCommitted(spark: SparkSession, baseDir: String,
                     asOf: Long = Long.MaxValue): DataFrame = {
     val vs = committedVersions(spark, baseDir).filter(_ <= asOf)
     require(vs.nonEmpty, s"no committed snapshot version <= $asOf under $baseDir")
-    spark.read.parquet(manifestData(spark, baseDir, vs.max))
+    val (dir, schema) = manifestData(spark, baseDir, vs.max)
+    schema.fold(spark.read)(spark.read.schema).parquet(dir)
   }
 
   /** Read ACROSS committed versions with schema evolution: the union of
@@ -433,7 +462,7 @@ object SnapshotStore {
                            to: Long = Long.MaxValue): DataFrame = {
     val vs = committedVersions(spark, baseDir).filter(v => v >= from && v <= to)
     require(vs.nonEmpty, s"no committed versions in [$from, $to] under $baseDir")
-    val dirs = vs.map(v => manifestData(spark, baseDir, v))
+    val dirs = vs.map(v => manifestData(spark, baseDir, v)._1)
     spark.read.option("mergeSchema", "true").parquet(dirs: _*)
   }
 
@@ -469,7 +498,7 @@ object SnapshotStore {
       // commit at EXACTLY baseV+1 (no auto-retry at higher slots): the
       // create-if-absent doubles as the still-latest check, atomically —
       // a wrong-base rewrite is never visible, not even transiently
-      if (tryPublishAt(spark, baseDir, staged, baseV + 1))
+      if (tryPublishAt(spark, baseDir, staged, baseV + 1, readSchema(kept)))
         return (baseV + 1, erased)
       // an interleaved commit took baseV+1: our rewrite misses its rows —
       // drop the stale staging and re-derive from the new latest
@@ -484,12 +513,14 @@ object SnapshotStore {
     * is acceptable). Same truncated-manifest cleanup as [[publishSnapshot]].
     */
   private def tryPublishAt(spark: SparkSession, baseDir: String,
-                           dataDir: String, v: Long): Boolean = {
+                           dataDir: String, v: Long,
+                           schema: StructType): Boolean = {
     val (fs, _) = fsFor(spark, baseDir)
     require(fs.exists(new org.apache.hadoop.fs.Path(dataDir)),
       s"tryPublishAt: staged dir $dataDir no longer exists")
     tryCreateManifest(fs, baseDir, v,
-                      dataDir.stripPrefix(baseDir).stripPrefix("/"), "")
+                      dataDir.stripPrefix(baseDir).stripPrefix("/"),
+                      Some(schema), "")
   }
 
   /** The atomic commit primitive: the manifest body is written IN FULL to a
@@ -513,14 +544,16 @@ object SnapshotStore {
     */
   private def tryCreateManifest(fs: org.apache.hadoop.fs.FileSystem,
                                 baseDir: String, v: Long, relData: String,
+                                schema: Option[StructType],
                                 extraJson: String): Boolean = {
-    val manifest = new org.apache.hadoop.fs.Path(f"$baseDir/_commits/v$v%05d.json")
+    val manifest = manifestPath(baseDir, v)
+    val schemaJson = schema.fold("")(s => s""", "schema": ${s.json}""")
     val tmp = new org.apache.hadoop.fs.Path(
       s"$baseDir/_commits/.tmp-${java.util.UUID.randomUUID().toString.take(12)}")
     try {
       val out = fs.create(tmp, false)
       try out.write(
-        s"""{"version": $v, "data": "$relData"$extraJson}""".getBytes("UTF-8"))
+        s"""{"version": $v, "data": "$relData"$schemaJson$extraJson}""".getBytes("UTF-8"))
       finally out.close()
       if (fs.exists(manifest)) { fs.delete(tmp, false); return false }
       if (fs.rename(tmp, manifest)) true
@@ -556,8 +589,7 @@ object SnapshotStore {
     val vs = committedVersions(spark, baseDir)
     val expired = vs.dropRight(math.max(1, keepLast))
     expired.foreach { v =>
-      fs.delete(new org.apache.hadoop.fs.Path(f"$baseDir/_commits/v$v%05d.json"),
-                false)
+      fs.delete(manifestPath(baseDir, v), false)
     }
     vacuumOrphans(spark, baseDir)
     expired
@@ -586,7 +618,7 @@ object SnapshotStore {
     val (fs, base) = fsFor(spark, baseDir)
     if (!fs.exists(base)) return 0
     val referenced = committedVersions(spark, baseDir)
-      .map(v => manifestData(spark, baseDir, v).split('/').last).toSet
+      .map(v => manifestData(spark, baseDir, v)._1.split('/').last).toSet
     val cutoff = System.currentTimeMillis() - minAgeMs
     val orphans = fs.listStatus(base).filter(_.isDirectory)
       .filter { s =>

@@ -1,10 +1,12 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.types.StructType
 
 /** The one sanctioned crossing into Spark's `private[sql]` surface: wrap a
-  * custom [[LogicalPlan]] node as a user-facing [[DataFrame]], and unpack
-  * a `.asc`/`.desc` sort [[Column]] into its key + direction. Spark's own
+  * custom [[LogicalPlan]] node as a user-facing [[DataFrame]], unpack
+  * a `.asc`/`.desc` sort [[Column]] into its key + direction, and relax a
+  * schema to the all-nullable form file sources read back. Spark's own
   * API offers no public surface for either on purpose (plans built by
   * hand skip analysis guarantees; sort direction lives in the ColumnNode
   * layer), so the engine keeps the crossing to a single audited call
@@ -26,4 +28,7 @@ object GraftSqlBridge {
             so.sortDirection == internal.SortOrder.Descending))
     case _ => None
   }
+
+  /** `s` with every field, nested ones too, nullable. */
+  def asNullable(s: StructType): StructType = s.asNullable
 }
