@@ -48,8 +48,10 @@ object StageCount {
           // ("count at X.scala:N"); `callSite.short` is only a job
           // property when someone called setCallSite
           val cs = j.stageInfos.headOption.map(_.name).getOrElse("")
-          // codegen stages carry their id ("WholeStageCodegen (3)")
-          val ops = j.stageInfos.flatMap(_.rddInfos).flatMap(_.scope)
+          // newest RDD first, so the list opens with the operator whose
+          // output the job computes; codegen stages carry their id
+          // ("WholeStageCodegen (3)")
+          val ops = j.stageInfos.flatMap(_.rddInfos).sortBy(-_.id).flatMap(_.scope)
             .map(_.name.replaceAll(" \\(\\d+\\)$", "")).distinct
           System.err.println(s"[job] ${j.jobId} stages=${j.stageInfos.size} cs=$cs ops=${ops.mkString(",")} desc=${d.take(80)}")
         }

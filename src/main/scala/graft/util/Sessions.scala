@@ -16,27 +16,28 @@ import org.apache.spark.sql.internal.StaticSQLConf
   * `spark.sql.codegen.cache.maxEntries`. Spark keeps every class Janino
   * compiled in one JVM-wide cache keyed by (thread context class loader,
   * generated source), sized once, when `CodeGenerator` initializes at the
-  * first code generation. In local mode the driver's `AppClassLoader` and
-  * the executor's `ExecutorClassLoader` both compile each class, so every
-  * class takes two keys, and the default of 100 entries evicts a working
-  * set of ~220 keys (`iterative_ml`'s four entries) before it is reused:
-  * every query ran Janino again on code it had already compiled. `tune`
-  * writes [[CodegenCacheEntries]] straight into the session's SQLConf
-  * (the runtime `conf.set` path refuses static keys), which is where
-  * `CodeGenerator` reads it, as long as no code was generated in the JVM
-  * before the first `tune`; if some was, the cache size is already fixed
-  * and `tune` logs one WARN instead of failing.
+  * first code generation. In local mode the driver thread and the task
+  * threads run under two different context class loaders and both compile
+  * each class, so every class takes two keys, and the default of 100
+  * entries evicted a working set of ~200 keys (`iterative_ml`'s four
+  * entries) before it was reused: every query ran Janino again on code it
+  * had already compiled. `tune` writes [[CodegenCacheEntries]] straight
+  * into the session's SQLConf (the runtime `conf.set` path refuses static
+  * keys), which is where `CodeGenerator` reads it, as long as no code was
+  * generated in the JVM before the first `tune`; if some was, the cache
+  * size is already fixed and `tune` logs one WARN instead of failing.
   */
 object Sessions {
   /** Entries of the generated-code class cache, sized from a count. With
     * the cache unbounded, one `iterative_ml` benchmark run compiles 207
-    * distinct keys, one `daily_etl` run 119, and the largest single query
-    * of a `graft.Bench` pass of all 403 queries @ALL@. The cache is four LRU
-    * segments of a quarter of the entries each (Guava's default
-    * concurrency), so 250 entries would hold `iterative_ml`'s keys at
-    * about 52 ± 6 per 62-entry segment; 500 is the smallest round value
-    * that keeps every segment at most half full, and it leaves no
-    * steady-state recompile that an unbounded cache avoids.
+    * distinct keys and one `daily_etl` run 119; in a `graft.Bench` pass of
+    * all 403 queries the largest single query (`q_ivfpq_recall`) compiles
+    * 200 on its first run. The cache is four LRU segments of a quarter of
+    * the entries each (Guava's default concurrency), so 250 entries would
+    * hold `iterative_ml`'s keys at about 52 ± 6 per 62-entry segment; 500
+    * is the smallest round value that keeps every segment at most half
+    * full, and it leaves no steady-state recompile that an unbounded cache
+    * avoids.
     */
   val CodegenCacheEntries = 500
 
@@ -48,8 +49,8 @@ object Sessions {
       StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key, CodegenCacheEntries.toString)
     if (codegenChecked.compareAndSet(false, true) &&
         CodegenMetrics.METRIC_COMPILATION_TIME.getCount > 0)
-      log.warn(s"code was generated before the first Sessions.tune: the " +
-        s"codegen class cache keeps its earlier size instead of " +
+      log.warn("code was generated before the first Sessions.tune: the " +
+        "codegen class cache keeps its earlier size instead of " +
         s"$CodegenCacheEntries entries, and queries may recompile classes")
     val c = spark.conf
     // events.parquet is TIMESTAMP(NANOS); Spark has no ns timestamp type, so
